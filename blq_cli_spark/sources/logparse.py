@@ -6,6 +6,14 @@ chain src/blq/commands/core.py:2037-2102, diagnosis serve.py:1368-1383):
 per-format regex rule tables, severity/location/code extraction,
 fingerprint computation, log-line spans, and auto-detection by scoring.
 
+Formats come in two kinds. The stateless single-line ones ("one regex,
+one event per matching line") are data: rows of `_ROWS`, each holding
+its pattern, severity, field map and prefilter literals. This module
+compiles a row into the Python matcher FORMATS holds; logparse_fast
+compiles the same row into its Column rule. Formats with state across
+lines, or with a computed field a row cannot state, are hand-written
+parsers here with hand-written twins in logparse_fast.
+
 Execution model:
 - driver-side `parse_content(text, fmt)` for small/in-memory content (S4)
 - distributed `parse_df(df)` via mapInPandas for bulk re-parse (S3): one
@@ -23,6 +31,7 @@ from __future__ import annotations
 import hashlib
 import re
 from collections.abc import Iterable, Iterator
+from typing import NamedTuple
 
 _SEVERITY_ALIASES = {
     "error": "error",
@@ -84,28 +93,455 @@ def _event(
     }
 
 
-# --- per-format parsers (line-oriented, minimal state) -----------------------
+# --- the rule table: stateless single-line formats as data -------------------
+# Every format whose whole grammar is "one regex, one event per matching
+# line" is one _Row. Two compilers read it: _row_parser below builds the
+# Python matcher that FORMATS holds, and logparse_fast._row_rule builds
+# the staged Column rule (the same pattern with group names stripped,
+# positions from re.compile(pattern).groupindex) and serves `pre` as
+# its prefilter and auto-detect candidate prefilter. Formats that need
+# anything else — state across lines, a computed message, an extra
+# guard, a prefix/contains-based severity — stay hand-written in both
+# modules.
 
-_GCC_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
-    r"(?P<sev>fatal error|error|warning|note):\s*(?P<msg>.*)$"
+
+class _Sev(NamedTuple):
+    """Severity taken from pattern group `group`: normalized through
+    _SEVERITY_ALIASES when `map` is None, else looked up in `map`
+    (exact value) with `default` for every other value."""
+
+    group: str
+    map: dict[str, str] | None = None
+    default: str = "info"
+
+
+class _Row(NamedTuple):
+    key: str  # format name in FORMATS / FAST_FORMATS
+    tool: str
+    category: str
+    doc: str  # the `blq formats` description
+    pattern: str  # named-group `re` pattern, anchored ^...$
+    sev: str | _Sev  # a literal severity, or one read from a group
+    fields: dict[str, str]  # _event field -> group; "message" required
+    # prefilter: AND of clauses, each an OR of literals the pattern
+    # requires; a "^" prefix means the line starts with the literal
+    pre: tuple[tuple[str, ...], ...]
+    event_type: str = "diagnostic"
+
+
+_ROWS: tuple[_Row, ...] = (
+    _Row(
+        "actionlint", "actionlint", "lint",
+        "actionlint: `.github/workflows/ci.yml:10:5: msg [rule]`.",
+        r"^(?P<file>[^\s:]+\.ya?ml):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<msg>.*?)\s*\[(?P<rule>[\w-]+)\]$",
+        "error",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".yml:", ".yaml:"), ("[",)),
+    ),
+    _Row(
+        "ansible_lint", "ansible-lint", "lint",
+        "ansible-lint: `playbook.yml:10: name[missing] All tasks should be named`.",
+        r"^(?P<file>[^\s:]+\.ya?ml):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
+        r"(?P<rule>[\w-]+(?:\[[\w-]+\])?):?\s+(?P<msg>.*)$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".yml:", ".yaml:"),),
+    ),
+    _Row(
+        "bazel", "bazel", "build",
+        "bazel: `ERROR: /path/BUILD:10:1: msg` build-file diagnostics.",
+        r"^(?P<sev>ERROR|WARNING): (?P<file>/[^\s:]+/BUILD(?:\.bazel)?):(?P<line>\d+):(?P<col>\d+):\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("^ERROR: ", "^WARNING: "), ("BUILD",)),
+    ),
+    _Row(
+        "checkstyle", "checkstyle", "lint",
+        "checkstyle: `[ERROR] /path/Foo.java:10:5: msg [RuleName]`.",
+        r"^\[(?P<sev>ERROR|WARN|INFO)\]\s+(?P<file>[^\s:]+):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
+        r"(?P<msg>.*?)\s*\[(?P<rule>\w+)\]$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        (("^[ERROR]", "^[WARN]", "^[INFO]"),),
+    ),
+    _Row(
+        "clang_tidy", "clang-tidy", "lint",
+        "clang-tidy: gcc shape + trailing `[check-name]` rule bracket.",
+        r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<sev>error|warning|note):\s*(?P<msg>.*?)\s*\[(?P<rule>[\w.,-]+)\]$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        (("error:", "warning:", "note:"), ("[",)),
+    ),
+    _Row(
+        "commitlint", "commitlint", "lint",
+        "commitlint: `✖  subject may not be empty [subject-empty]`.",
+        r"^\s*[✖x]\s+(?P<msg>.*?)\s+\[(?P<rule>[\w-]+)\]\s*$",
+        "error",
+        {"message": "msg", "rule": "rule"},
+        (("✖", "x"), ("[",)),
+    ),
+    _Row(
+        "cppcheck", "cppcheck", "lint",
+        "cppcheck: `file.c:10:5: error: msg [errorId]` (modern template).",
+        r"^(?P<file>[^\s:][^:]*):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
+        r"(?P<sev>error|warning|style|performance|portability|information):\s*"
+        r"(?P<msg>.*?)\s*\[(?P<code>[\w]+)\]$",
+        _Sev("sev", {"error": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        (("[",), ("error:", "warning:", "style:", "performance:", "portability:", "information:")),
+    ),
+    _Row(
+        "dart_analyze", "dart", "lint",
+        "dart analyze: `error • msg • lib/main.dart:10:5 • rule_name`.",
+        r"^\s*(?P<sev>error|warning|info) (?:•|-) (?P<msg>.+?) (?:•|-) "
+        r"(?P<file>[^\s:]+\.dart):(?P<line>\d+):(?P<col>\d+) (?:•|-) (?P<rule>[\w_]+)\s*$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".dart:",),),
+    ),
+    _Row(
+        "detekt", "detekt", "lint",
+        "detekt: `src/App.kt:10:5: msg [MagicNumber]` (no severity keyword).",
+        r"^(?P<file>[^\s:]+\.kts?):(?P<line>\d+):(?P<col>\d+): (?P<msg>.*?) \[(?P<rule>[\w.]+)\]$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".kt",), ("[",)),
+    ),
+    _Row(
+        "dmd", "dmd", "compile",
+        "D (dmd/ldc): `src/app.d(10): Error: undefined identifier foo`.",
+        r"^(?P<file>[^\s(]+\.di?)\((?P<line>\d+)(?:,(?P<col>\d+))?\):\s*"
+        r"(?P<sev>Error|Warning|Deprecation):\s*(?P<msg>.*)$",
+        _Sev("sev", {"Error": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("Error:", "Warning:", "Deprecation:"), ("(",)),
+    ),
+    _Row(
+        "gcc", "gcc", "compile", "",
+        r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
+        r"(?P<sev>fatal error|error|warning|note):\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("error:", "warning:", "note:"),),
+    ),
+    # no severity keyword (which is why the gcc grammar misses these
+    # lines); the negative lookahead keeps gcc-shaped lines out
+    _Row(
+        "go_build", "go", "compile",
+        "go build / go vet: `./main.go:10:5: undefined: foo` — file:line:col",
+        r"^(?P<file>\.?/?[\w./-]+\.go):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>(?!.*\b(?:error|warning)\b:).+)$",
+        "error",
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".go:",),),
+    ),
+    _Row(
+        "golangci_lint", "golangci-lint", "lint",
+        "golangci-lint: `main.go:10:2: message (lintername)`.",
+        r"^(?P<file>[^\s:][^:]*\.go):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
+        r"(?P<msg>.*?)\s+\((?P<rule>[a-z][\w-]*)\)$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".go:",),),
+    ),
+    _Row(
+        "hadolint", "hadolint", "lint",
+        "hadolint: `Dockerfile:3 DL3008 warning: Pin versions in apt get`.",
+        r"^(?P<file>[^\s:]+):(?P<line>\d+)\s+(?P<code>DL\d+|SC\d+)\s+"
+        r"(?P<sev>error|warning|info|style):\s*(?P<msg>.*)$",
+        _Sev("sev", {"error": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "code": "code"},
+        (("DL", "SC"),),
+    ),
+    _Row(
+        "kotlinc", "kotlinc", "compile",
+        "kotlinc: `e: /path/File.kt: (12, 8): unresolved reference: foo`.",
+        r"^(?P<sev>[ew]): (?P<file>[^:]+\.kts?): \((?P<line>\d+), (?P<col>\d+)\): (?P<msg>.*)$",
+        _Sev("sev", {"e": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("^e: ", "^w: "),),
+    ),
+    _Row(
+        "ktlint", "ktlint", "lint",
+        "ktlint: `src/App.kt:10:5: msg (standard:rule-name)`.",
+        r"^(?P<file>[^\s:][^:]*\.kts?):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<msg>.*?)\s*\((?P<rule>[\w:-]+)\)$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".kt",), ("(",)),
+    ),
+    _Row(
+        "markdownlint", "markdownlint", "lint",
+        "markdownlint: `README.md:12:81 MD013/line-length Line length ...`.",
+        r"^(?P<file>[^\s:][^:]*\.(?:md|markdown)):(?P<line>\d+)(?::(?P<col>\d+))?\s+"
+        r"(?P<code>MD\d+)(?:/(?P<rule>[\w-]+))?\s+(?P<msg>.*)$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code", "rule": "rule"},
+        ((".md:", ".markdown:"), ("MD",)),
+    ),
+    _Row(
+        "maven", "maven", "build", "",
+        r"^\[(?P<sev>ERROR|WARNING)\]\s+(?:(?P<file>[^\s\[]+):\[(?P<line>\d+),(?P<col>\d+)\]\s*)?(?P<msg>.+)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("^[ERROR]", "^[WARNING]"),),
+    ),
+    _Row(
+        "meson", "meson", "build",
+        "meson: `meson.build:10:5: ERROR: msg`.",
+        r"^(?P<file>[^\s:]+\.build):(?P<line>\d+):(?P<col>\d+): (?P<sev>ERROR|WARNING): (?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".build:",),),
+    ),
+    # mypy only ever reports on .py/.pyi files — the restriction is what
+    # disambiguates it from clang-tidy's identically-shaped output
+    _Row(
+        "mypy", "mypy", "typecheck", "",
+        r"^(?P<file>[^\s:][^:]*\.pyi?):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
+        r"(?P<sev>error|warning|note):\s*(?P<msg>.*?)(?:\s+\[(?P<code>[a-z0-9-]+)\])?$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        ((".py",), ("error:", "warning:", "note:")),
+    ),
+    _Row(
+        "nim", "nim", "compile",
+        "nim: `src/main.nim(10, 5) Error: undeclared identifier: 'foo'`.",
+        r"^(?P<file>[^\s(]+\.nim)\((?P<line>\d+), (?P<col>\d+)\)\s+"
+        r"(?P<sev>Error|Warning|Hint):\s*(?P<msg>.*)$",
+        _Sev("sev", {"Error": "error", "Warning": "warning"}, "info"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".nim(",),),
+    ),
+    _Row(
+        "nvcc", "nvcc", "compile",
+        "nvcc: `kernel.cu(15): error: identifier \"x\" is undefined`.",
+        r"^(?P<file>[^\s(]+\.(?:cu|cuh|cpp|h))\((?P<line>\d+)\):\s*"
+        r"(?P<sev>error|warning):\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line"},
+        (("(",), ("error:", "warning:")),
+    ),
+    _Row(
+        "pascal", "fpc", "compile",
+        "fpc: `main.pas(10,5) Error: Identifier not found \"foo\"`.",
+        r"^(?P<file>[^\s(]+\.(?:pas|pp|dpr))\((?P<line>\d+),(?P<col>\d+)\)\s+"
+        r"(?P<sev>Error|Warning|Note|Fatal):\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".pas(", ".pp(", ".dpr("),),
+    ),
+    _Row(
+        "phpstan", "phpstan", "typecheck",
+        "phpstan --error-format=raw: `/src/Foo.php:10:Call to undefined ...`.",
+        r"^(?P<file>[^\s:]+\.php):(?P<line>\d+):(?P<msg>.+?)\.?$",
+        "error",
+        {"message": "msg", "file": "file", "line": "line"},
+        ((".php:",),),
+    ),
+    _Row(
+        "pmd", "pmd", "lint",
+        "pmd text: `/src/Foo.java:10: UnusedLocalVariable: msg`.",
+        r"^(?P<file>[^\s:]+\.java):(?P<line>\d+):\s*(?P<rule>\w+):\s*(?P<msg>.*)$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "rule": "rule"},
+        ((".java:",),),
+    ),
+    _Row(
+        "prettier", "prettier", "format",
+        "prettier: `[error] src/a.js: SyntaxError: msg (10:5)`.",
+        r"^\[(?P<sev>error|warn)\] (?P<file>[^\s:]+): (?P<code>\w+): (?P<msg>.*?) \((?P<line>\d+):(?P<col>\d+)\)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        (("^[error]", "^[warn]"),),
+    ),
+    _Row(
+        "protoc", "protoc", "compile",
+        "protoc: `api/v1/user.proto:10:5: \"Foo\" is not defined.`",
+        r"^(?P<file>[^\s:]+\.proto):(?P<line>\d+):(?P<col>\d+):\s*(?P<msg>.*)$",
+        "error",
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".proto:",),),
+    ),
+    _Row(
+        "psalm", "psalm", "typecheck",
+        "psalm: `ERROR: UndefinedVariable - src/a.php:10:5 - Cannot find $x`.",
+        r"^(?P<sev>ERROR|INFO): (?P<rule>\w+) - (?P<file>[^\s:]+):(?P<line>\d+):(?P<col>\d+) - (?P<msg>.*)$",
+        _Sev("sev", {"ERROR": "error"}, "info"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        (("^ERROR: ", "^INFO: "),),
+    ),
+    # table rows: `PSAvoidUsingCmdletAliases Warning deploy.ps1 10 'gci' is an alias...`
+    _Row(
+        "psscriptanalyzer", "psscriptanalyzer", "lint",
+        "PSScriptAnalyzer table rows: `PSAvoidUsingCmdletAliases Warning",
+        r"^(?P<rule>PS\w+)\s+(?P<sev>Error|Warning|Information)\s+(?P<file>[^\s]+\.psm?1)\s+(?P<line>\d+)\s+(?P<msg>.*)$",
+        _Sev("sev", {"Error": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "rule": "rule"},
+        (("^PS",),),
+    ),
+    _Row(
+        "puppet", "puppet", "deploy",
+        "puppet: `Error: msg (file: /p/site.pp, line: 10, column: 5)`.",
+        r"^(?P<sev>Error|Warning): (?P<msg>.*?) \(file: (?P<file>[^,]+), line: (?P<line>\d+)(?:, column: (?P<col>\d+))?\)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("^Error: ", "^Warning: "), ("(file:",)),
+    ),
+    _Row(
+        "rubocop", "rubocop", "lint",
+        "rubocop: `app.rb:10:5: C: Style/FrozenStringLiteral: msg`.",
+        r"^(?P<file>[^\s:][^:]*\.rb):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<sev>[CWEF]):\s*(?:\[Correctable\]\s*)?(?P<rule>[\w/]+):\s*(?P<msg>.*)$",
+        _Sev("sev", {"E": "error", "F": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".rb:",),),
+    ),
+    _Row(
+        "ruff", "ruff", "lint",
+        "ruff: `src/a.py:10:5: F401 [*] unused import`.",
+        r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<code>[A-Z]{1,4}\d{3,4})\s+(?:\[\*\]\s+)?(?P<msg>.*)$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code", "rule": "code"},
+        ((":",),),
+    ),
+    _Row(
+        "sbt", "scalac", "compile",
+        "sbt/scalac: `[error] /path/Foo.scala:10:5: not found: value x`.",
+        r"^\[(?P<sev>error|warn)\]\s+(?P<file>[^\s:]+\.scala):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>.*)$",
+        _Sev("sev", {"error": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("^[error]", "^[warn]"), (".scala:",)),
+    ),
+    _Row(
+        "scalastyle", "scalastyle", "lint",
+        "scalastyle: `error file=/p/Foo.scala message=msg line=10 column=5`.",
+        r"^(?P<sev>error|warning) file=(?P<file>[^\s]+) message=(?P<msg>.*?)"
+        r"(?: line=(?P<line>\d+))?(?: column=(?P<col>\d+))?$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        (("^error file=", "^warning file="),),
+    ),
+    _Row(
+        "solhint", "solhint", "lint",
+        "solhint: `contracts/Token.sol:10:5: Error: msg [rule]`.",
+        r"^(?P<file>[^\s:]+\.sol):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<sev>Error|Warning):\s*(?P<msg>.*?)\s*\[(?P<rule>[\w-]+)\]$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".sol:",),),
+    ),
+    _Row(
+        "sphinx", "sphinx", "docs",
+        "sphinx-build: `/docs/index.rst:10: WARNING: undefined label: foo`.",
+        r"^(?P<file>[^\s:]+\.(?:rst|md|txt|py)):(?P<line>\d+): (?P<sev>WARNING|ERROR|SEVERE): (?P<msg>.*)$",
+        _Sev("sev", {"WARNING": "warning"}, "error"),
+        {"message": "msg", "file": "file", "line": "line"},
+        (("WARNING:", "ERROR:", "SEVERE:"),),
+    ),
+    _Row(
+        "spotbugs", "spotbugs", "lint",
+        "spotbugs text: `M D NP: msg  At Foo.java:[line 10]`.",
+        r"^[MH]\s+[A-Z]\s+(?P<rule>\w+): (?P<msg>.*?)\s+At (?P<file>[\w./$]+\.java):\[line (?P<line>\d+)\]$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "rule": "rule"},
+        (("At ",), (".java:[line",)),
+    ),
+    # the trailing check code (SA4006) tells it apart from golangci-lint's
+    # `(lintername)`
+    _Row(
+        "staticcheck", "staticcheck", "lint",
+        "staticcheck: `main.go:10:5: msg (SA4006)` — go file:line:col with a",
+        r"^(?P<file>[^\s:]+\.go):(?P<line>\d+):(?P<col>\d+): (?P<msg>.*?) \((?P<code>(?:S|SA|ST|U|QF)\d+)\)$",
+        "warning",
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        ((".go:",), ("(",)),
+    ),
+    _Row(
+        "swiftc", "swiftc", "compile",
+        "swiftc: gcc shape keyed on the .swift extension.",
+        r"^(?P<file>[^\s:][^:]*\.swift):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<sev>error|warning|note):\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".swift:",), ("error:", "warning:", "note:")),
+    ),
+    _Row(
+        "swiftlint", "swiftlint", "lint",
+        "swiftlint: swiftc shape + trailing `(rule_id)`.",
+        r"^(?P<file>[^\s:]+\.swift):(?P<line>\d+):(?P<col>\d+): "
+        r"(?P<sev>error|warning): (?P<msg>.*?) \((?P<rule>[\w_]+)\)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
+        ((".swift:",), ("(",)),
+    ),
+    _Row(
+        "tsc", "tsc", "compile",
+        "TypeScript compiler: `src/a.ts(10,5): error TS2304: message`.",
+        r"^(?P<file>[^\s(][^(]*)\((?P<line>\d+),(?P<col>\d+)\):\s*"
+        r"(?P<sev>error|warning)\s+(?P<code>TS\d+):\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        (("TS",), ("error", "warning")),
+    ),
+    _Row(
+        "verilator", "verilator", "compile",
+        "verilator: `%Error: top.v:10:5: msg` / `%Warning-WIDTH: ...`.",
+        r"^%(?P<sev>Error|Warning)(?:-(?P<code>[A-Z]+))?: (?P<file>[^\s:]+):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        (("^%Error", "^%Warning"),),
+    ),
+    _Row(
+        "zig", "zig", "compile",
+        "zig: `src/main.zig:10:5: error: use of undeclared identifier 'foo'`.",
+        r"^(?P<file>[^\s:]+\.zig):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<sev>error|note):\s*(?P<msg>.*)$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".zig:",),),
+    ),
 )
 
 
-def parse_gcc(lines: list[str]) -> Iterator[dict]:
-    for i, ln in enumerate(lines, 1):
-        m = _GCC_RE.match(ln)
-        if m:
+def _row_parser(row: _Row):
+    """Compile one rule row into its Python matcher (lines -> events)."""
+    rx = re.compile(row.pattern)
+    sev = row.sev
+    groups = [(f, g) for f, g in row.fields.items() if f != "message"]
+
+    def parse(lines: list[str]) -> Iterator[dict]:
+        for i, ln in enumerate(lines, 1):
+            m = rx.match(ln)
+            if not m:
+                continue
+            if isinstance(sev, str):
+                severity = sev
+            elif sev.map is None:
+                severity = _norm_severity(m[sev.group])
+            else:
+                severity = sev.map.get(m[sev.group], sev.default)
+            kw = {f: m[g] for f, g in groups}
+            for f in ("line", "col"):
+                if f in kw:
+                    kw[f] = int(kw[f]) if kw[f] else None
             yield _event(
-                "gcc",
-                "compile",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
+                row.tool, row.category, severity, m[row.fields["message"]], i,
+                event_type=row.event_type, **kw,
             )
+
+    parse.__name__ = f"parse_{row.key}"
+    parse.__doc__ = row.doc
+    return parse
+
+
+_ROW_BY_KEY = {r.key: r for r in _ROWS}
+_ROW_PARSE = {r.key: _row_parser(r) for r in _ROWS}
+
+
+# --- hand-written parsers (line-oriented, minimal state) ---------------------
 
 
 _PYTEST_FAILED_RE = re.compile(
@@ -133,31 +569,6 @@ def parse_pytest(lines: list[str]) -> Iterator[dict]:
         m = _PYTEST_ASSERT_RE.match(ln)
         if m:
             yield _event("pytest", "test", "error", m["msg"], i)
-
-
-_MYPY_RE = re.compile(
-    # mypy only ever reports on .py/.pyi files — the restriction is what
-    # disambiguates it from clang-tidy's identically-shaped output
-    r"^(?P<file>[^\s:][^:]*\.pyi?):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
-    r"(?P<sev>error|warning|note):\s*(?P<msg>.*?)(?:\s+\[(?P<code>[a-z0-9-]+)\])?$"
-)
-
-
-def parse_mypy(lines: list[str]) -> Iterator[dict]:
-    for i, ln in enumerate(lines, 1):
-        m = _MYPY_RE.match(ln)
-        if m:
-            yield _event(
-                "mypy",
-                "typecheck",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-                code=m["code"],
-            )
 
 
 _ESLINT_FILE_RE = re.compile(r"^(?P<file>[^\s].*\.(?:js|jsx|ts|tsx|mjs|cjs|vue))$")
@@ -271,27 +682,6 @@ def parse_go_test(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_MAVEN_RE = re.compile(
-    r"^\[(?P<sev>ERROR|WARNING)\]\s+(?:(?P<file>[^\s\[]+):\[(?P<line>\d+),(?P<col>\d+)\]\s*)?(?P<msg>.+)$"
-)
-
-
-def parse_maven(lines: list[str]) -> Iterator[dict]:
-    for i, ln in enumerate(lines, 1):
-        m = _MAVEN_RE.match(ln)
-        if m:
-            yield _event(
-                "maven",
-                "build",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]) if m["line"] else None,
-                col=int(m["col"]) if m["col"] else None,
-            )
-
-
 _GENERIC_RE = re.compile(
     r"(?i)\b(?P<sev>error|warning|fatal)\b[:\s]+(?P<msg>.*)$"
 )
@@ -304,30 +694,6 @@ def parse_generic(lines: list[str]) -> Iterator[dict]:
         m = _GENERIC_RE.search(ln)
         if m and m["msg"]:
             yield _event("generic", "log", _norm_severity(m["sev"]), m["msg"], i)
-
-
-_GOLANGCI_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*\.go):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
-    r"(?P<msg>.*?)\s+\((?P<rule>[a-z][\w-]*)\)$"
-)
-
-
-def parse_golangci_lint(lines: list[str]) -> Iterator[dict]:
-    """golangci-lint: `main.go:10:2: message (lintername)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _GOLANGCI_RE.match(ln)
-        if m:
-            yield _event(
-                "golangci-lint",
-                "lint",
-                "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-                rule=m["rule"],
-            )
 
 
 _ANSIBLE_FATAL_RE = re.compile(
@@ -561,30 +927,6 @@ def parse_gradle(lines: list[str]) -> Iterator[dict]:
                 yield _event("gradle", "build", "error", msg, i + 1)
 
 
-_TSC_RE = re.compile(
-    r"^(?P<file>[^\s(][^(]*)\((?P<line>\d+),(?P<col>\d+)\):\s*"
-    r"(?P<sev>error|warning)\s+(?P<code>TS\d+):\s*(?P<msg>.*)$"
-)
-
-
-def parse_tsc(lines: list[str]) -> Iterator[dict]:
-    """TypeScript compiler: `src/a.ts(10,5): error TS2304: message`."""
-    for i, ln in enumerate(lines, 1):
-        m = _TSC_RE.match(ln)
-        if m:
-            yield _event(
-                "tsc",
-                "compile",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                code=m["code"],
-            )
-
-
 _JEST_FAIL_RE = re.compile(r"^\s*(?P<sev>FAIL|PASS)\s+(?P<file>[^\s]+)\s*$")
 _JEST_TEST_RE = re.compile(r"^\s*[✕x●]\s+(?P<test>.+?)(?:\s+\(\d+\s*m?s\))?\s*$")
 
@@ -651,55 +993,7 @@ def parse_shellcheck(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_RUFF_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<code>[A-Z]{1,4}\d{3,4})\s+(?:\[\*\]\s+)?(?P<msg>.*)$"
-)
-
-
-def parse_ruff(lines: list[str]) -> Iterator[dict]:
-    """ruff: `src/a.py:10:5: F401 [*] unused import`."""
-    for i, ln in enumerate(lines, 1):
-        m = _RUFF_RE.match(ln)
-        if m:
-            yield _event(
-                "ruff",
-                "lint",
-                "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                code=m["code"],
-                rule=m["code"],
-            )
-
-
 # --- batch 3 formats (duck_hunt breadth, reference core.py:2037-2102) --------
-
-_CLANG_TIDY_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<sev>error|warning|note):\s*(?P<msg>.*?)\s*\[(?P<rule>[\w.,-]+)\]$"
-)
-
-
-def parse_clang_tidy(lines: list[str]) -> Iterator[dict]:
-    """clang-tidy: gcc shape + trailing `[check-name]` rule bracket."""
-    for i, ln in enumerate(lines, 1):
-        m = _CLANG_TIDY_RE.match(ln)
-        if m:
-            yield _event(
-                "clang-tidy",
-                "lint",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                rule=m["rule"],
-            )
 
 
 _JAVAC_RE = re.compile(
@@ -735,28 +1029,6 @@ def parse_javac(lines: list[str]) -> Iterator[dict]:
             pending = None
     if pending:
         yield pending
-
-
-_KOTLINC_RE = re.compile(
-    r"^(?P<sev>[ew]): (?P<file>[^:]+\.kts?): \((?P<line>\d+), (?P<col>\d+)\): (?P<msg>.*)$"
-)
-
-
-def parse_kotlinc(lines: list[str]) -> Iterator[dict]:
-    """kotlinc: `e: /path/File.kt: (12, 8): unresolved reference: foo`."""
-    for i, ln in enumerate(lines, 1):
-        m = _KOTLINC_RE.match(ln)
-        if m:
-            yield _event(
-                "kotlinc",
-                "compile",
-                "error" if m["sev"] == "e" else "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-            )
 
 
 _PYLINT_RE = re.compile(
@@ -1009,51 +1281,6 @@ def parse_junit_xml(lines: list[str]) -> Iterator[dict]:
             current = None
 
 
-_SWIFTC_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*\.swift):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<sev>error|warning|note):\s*(?P<msg>.*)$"
-)
-
-
-def parse_swiftc(lines: list[str]) -> Iterator[dict]:
-    """swiftc: gcc shape keyed on the .swift extension."""
-    for i, ln in enumerate(lines, 1):
-        m = _SWIFTC_RE.match(ln)
-        if m:
-            yield _event(
-                "swiftc",
-                "compile",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-            )
-
-
-_NVCC_RE = re.compile(
-    r"^(?P<file>[^\s(]+\.(?:cu|cuh|cpp|h))\((?P<line>\d+)\):\s*"
-    r"(?P<sev>error|warning):\s*(?P<msg>.*)$"
-)
-
-
-def parse_nvcc(lines: list[str]) -> Iterator[dict]:
-    """nvcc: `kernel.cu(15): error: identifier \"x\" is undefined`."""
-    for i, ln in enumerate(lines, 1):
-        m = _NVCC_RE.match(ln)
-        if m:
-            yield _event(
-                "nvcc",
-                "compile",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-            )
-
-
 _MAKE_ERR_RE = re.compile(
     r"^make(?:\[\d+\])?: \*\*\* \[(?P<target>[^\]]+)\] (?P<msg>Error \d+.*)$"
 )
@@ -1118,53 +1345,6 @@ def parse_yamllint(lines: list[str]) -> Iterator[dict]:
                 line=int(m["line"]),
                 col=int(m["col"]),
                 rule=m["rule"],
-            )
-
-
-_MDLINT_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*\.(?:md|markdown)):(?P<line>\d+)(?::(?P<col>\d+))?\s+"
-    r"(?P<code>MD\d+)(?:/(?P<rule>[\w-]+))?\s+(?P<msg>.*)$"
-)
-
-
-def parse_markdownlint(lines: list[str]) -> Iterator[dict]:
-    """markdownlint: `README.md:12:81 MD013/line-length Line length ...`."""
-    for i, ln in enumerate(lines, 1):
-        m = _MDLINT_RE.match(ln)
-        if m:
-            yield _event(
-                "markdownlint",
-                "lint",
-                "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-                code=m["code"],
-                rule=m["rule"],
-            )
-
-
-_SBT_RE = re.compile(
-    r"^\[(?P<sev>error|warn)\]\s+(?P<file>[^\s:]+\.scala):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>.*)$"
-)
-
-
-def parse_sbt(lines: list[str]) -> Iterator[dict]:
-    """sbt/scalac: `[error] /path/Foo.scala:10:5: not found: value x`."""
-    for i, ln in enumerate(lines, 1):
-        m = _SBT_RE.match(ln)
-        if m:
-            yield _event(
-                "scalac",
-                "compile",
-                "error" if m["sev"] == "error" else "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
             )
 
 
@@ -1291,127 +1471,6 @@ def parse_valgrind(lines: list[str]) -> Iterator[dict]:
 
 # --- batch 4 formats ---------------------------------------------------------
 
-_CPPCHECK_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
-    r"(?P<sev>error|warning|style|performance|portability|information):\s*"
-    r"(?P<msg>.*?)\s*\[(?P<code>[\w]+)\]$"
-)
-
-
-def parse_cppcheck(lines: list[str]) -> Iterator[dict]:
-    """cppcheck: `file.c:10:5: error: msg [errorId]` (modern template)."""
-    for i, ln in enumerate(lines, 1):
-        m = _CPPCHECK_RE.match(ln)
-        if m:
-            sev = m["sev"]
-            yield _event(
-                "cppcheck",
-                "lint",
-                _norm_severity("warning" if sev not in ("error", "warning") else sev),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-                code=m["code"],
-            )
-
-
-_RUBOCOP_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*\.rb):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<sev>[CWEF]):\s*(?:\[Correctable\]\s*)?(?P<rule>[\w/]+):\s*(?P<msg>.*)$"
-)
-
-
-def parse_rubocop(lines: list[str]) -> Iterator[dict]:
-    """rubocop: `app.rb:10:5: C: Style/FrozenStringLiteral: msg`."""
-    for i, ln in enumerate(lines, 1):
-        m = _RUBOCOP_RE.match(ln)
-        if m:
-            yield _event(
-                "rubocop",
-                "lint",
-                "error" if m["sev"] in "EF" else "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
-_CHECKSTYLE_RE = re.compile(
-    r"^\[(?P<sev>ERROR|WARN|INFO)\]\s+(?P<file>[^\s:]+):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
-    r"(?P<msg>.*?)\s*\[(?P<rule>\w+)\]$"
-)
-
-
-def parse_checkstyle(lines: list[str]) -> Iterator[dict]:
-    """checkstyle: `[ERROR] /path/Foo.java:10:5: msg [RuleName]`."""
-    for i, ln in enumerate(lines, 1):
-        m = _CHECKSTYLE_RE.match(ln)
-        if m:
-            yield _event(
-                "checkstyle",
-                "lint",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-                rule=m["rule"],
-            )
-
-
-_KTLINT_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*\.kts?):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<msg>.*?)\s*\((?P<rule>[\w:-]+)\)$"
-)
-
-
-def parse_ktlint(lines: list[str]) -> Iterator[dict]:
-    """ktlint: `src/App.kt:10:5: msg (standard:rule-name)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _KTLINT_RE.match(ln)
-        if m:
-            yield _event(
-                "ktlint",
-                "lint",
-                "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
-_HADOLINT_RE = re.compile(
-    r"^(?P<file>[^\s:]+):(?P<line>\d+)\s+(?P<code>DL\d+|SC\d+)\s+"
-    r"(?P<sev>error|warning|info|style):\s*(?P<msg>.*)$"
-)
-
-
-def parse_hadolint(lines: list[str]) -> Iterator[dict]:
-    """hadolint: `Dockerfile:3 DL3008 warning: Pin versions in apt get`."""
-    for i, ln in enumerate(lines, 1):
-        m = _HADOLINT_RE.match(ln)
-        if m:
-            sev = m["sev"]
-            yield _event(
-                "hadolint",
-                "lint",
-                _norm_severity("warning" if sev in ("info", "style") else sev),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                code=m["code"],
-            )
-
 
 _SQLFLUFF_FILE_RE = re.compile(r"^==\s*\[(?P<file>[^\]]+)\]\s*(?:FAIL|PASS)")
 _SQLFLUFF_ISSUE_RE = re.compile(
@@ -1442,28 +1501,6 @@ def parse_sqlfluff(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_BAZEL_RE = re.compile(
-    r"^(?P<sev>ERROR|WARNING): (?P<file>/[^\s:]+/BUILD(?:\.bazel)?):(?P<line>\d+):(?P<col>\d+):\s*(?P<msg>.*)$"
-)
-
-
-def parse_bazel(lines: list[str]) -> Iterator[dict]:
-    """bazel: `ERROR: /path/BUILD:10:1: msg` build-file diagnostics."""
-    for i, ln in enumerate(lines, 1):
-        m = _BAZEL_RE.match(ln)
-        if m:
-            yield _event(
-                "bazel",
-                "build",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-            )
-
-
 _LUACHECK_RE = re.compile(
     r"^\s*(?P<file>[^\s:]+\.lua):(?P<line>\d+):(?P<col>\d+):\s*"
     r"\((?P<sev>[WE])(?P<num>\d+)\)\s*(?P<msg>.*)$"
@@ -1485,75 +1522,6 @@ def parse_luacheck(lines: list[str]) -> Iterator[dict]:
                 line=int(m["line"]),
                 col=int(m["col"]),
                 code=m["sev"] + m["num"],
-            )
-
-
-_ACTIONLINT_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.ya?ml):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<msg>.*?)\s*\[(?P<rule>[\w-]+)\]$"
-)
-
-
-def parse_actionlint(lines: list[str]) -> Iterator[dict]:
-    """actionlint: `.github/workflows/ci.yml:10:5: msg [rule]`."""
-    for i, ln in enumerate(lines, 1):
-        m = _ACTIONLINT_RE.match(ln)
-        if m:
-            yield _event(
-                "actionlint",
-                "lint",
-                "error",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
-_PROTOC_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.proto):(?P<line>\d+):(?P<col>\d+):\s*(?P<msg>.*)$"
-)
-
-
-def parse_protoc(lines: list[str]) -> Iterator[dict]:
-    """protoc: `api/v1/user.proto:10:5: "Foo" is not defined.`"""
-    for i, ln in enumerate(lines, 1):
-        m = _PROTOC_RE.match(ln)
-        if m:
-            yield _event(
-                "protoc",
-                "compile",
-                "error",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-            )
-
-
-_ZIG_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.zig):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<sev>error|note):\s*(?P<msg>.*)$"
-)
-
-
-def parse_zig(lines: list[str]) -> Iterator[dict]:
-    """zig: `src/main.zig:10:5: error: use of undeclared identifier 'foo'`."""
-    for i, ln in enumerate(lines, 1):
-        m = _ZIG_RE.match(ln)
-        if m:
-            yield _event(
-                "zig",
-                "compile",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
             )
 
 
@@ -1698,19 +1666,21 @@ def parse_vitest(lines: list[str]) -> Iterator[dict]:
             )
 
 
+# Key order is part of the contract: diagnose (and its JVM twin) breaks
+# ties by registry position.
 FORMATS: dict[str, callable] = {
-    "gcc": parse_gcc,
+    "gcc": _ROW_PARSE["gcc"],
     "pytest": parse_pytest,
-    "mypy": parse_mypy,
+    "mypy": _ROW_PARSE["mypy"],
     "eslint": parse_eslint,
     "python_traceback": parse_python_traceback,
     "rustc": parse_rustc,
     "go_test": parse_go_test,
-    "maven": parse_maven,
-    "tsc": parse_tsc,
+    "maven": _ROW_PARSE["maven"],
+    "tsc": _ROW_PARSE["tsc"],
     "msbuild": parse_msbuild,
     "java_stacktrace": parse_java_stacktrace,
-    "golangci_lint": parse_golangci_lint,
+    "golangci_lint": _ROW_PARSE["golangci_lint"],
     "ansible": parse_ansible,
     "npm": parse_npm,
     "docker_build": parse_docker_build,
@@ -1719,10 +1689,10 @@ FORMATS: dict[str, callable] = {
     "gradle": parse_gradle,
     "jest": parse_jest,
     "shellcheck": parse_shellcheck,
-    "ruff": parse_ruff,
-    "clang_tidy": parse_clang_tidy,
+    "ruff": _ROW_PARSE["ruff"],
+    "clang_tidy": _ROW_PARSE["clang_tidy"],
     "javac": parse_javac,
-    "kotlinc": parse_kotlinc,
+    "kotlinc": _ROW_PARSE["kotlinc"],
     "pylint": parse_pylint,
     "flake8": parse_flake8,
     "black_isort": parse_black_isort,
@@ -1730,27 +1700,27 @@ FORMATS: dict[str, callable] = {
     "phpunit": parse_phpunit,
     "ruby_test": parse_ruby_test,
     "junit_xml": parse_junit_xml,
-    "swiftc": parse_swiftc,
-    "nvcc": parse_nvcc,
+    "swiftc": _ROW_PARSE["swiftc"],
+    "nvcc": _ROW_PARSE["nvcc"],
     "make_ld": parse_make_ld,
     "yamllint": parse_yamllint,
-    "markdownlint": parse_markdownlint,
-    "sbt": parse_sbt,
+    "markdownlint": _ROW_PARSE["markdownlint"],
+    "sbt": _ROW_PARSE["sbt"],
     "dotnet_test": parse_dotnet_test,
     "pip_resolver": parse_pip_resolver,
     "valgrind": parse_valgrind,
     "vitest": parse_vitest,
-    "cppcheck": parse_cppcheck,
-    "rubocop": parse_rubocop,
-    "checkstyle": parse_checkstyle,
-    "ktlint": parse_ktlint,
-    "hadolint": parse_hadolint,
+    "cppcheck": _ROW_PARSE["cppcheck"],
+    "rubocop": _ROW_PARSE["rubocop"],
+    "checkstyle": _ROW_PARSE["checkstyle"],
+    "ktlint": _ROW_PARSE["ktlint"],
+    "hadolint": _ROW_PARSE["hadolint"],
     "sqlfluff": parse_sqlfluff,
-    "bazel": parse_bazel,
+    "bazel": _ROW_PARSE["bazel"],
     "luacheck": parse_luacheck,
-    "actionlint": parse_actionlint,
-    "protoc": parse_protoc,
-    "zig": parse_zig,
+    "actionlint": _ROW_PARSE["actionlint"],
+    "protoc": _ROW_PARSE["protoc"],
+    "zig": _ROW_PARSE["zig"],
     "php_lint": parse_php_lint,
     "stylelint": parse_stylelint,
     "elixir": parse_elixir,
@@ -1831,15 +1801,20 @@ def match_command_format(cmd: str) -> str | None:
 def format_catalog() -> list[tuple[str, str, str]]:
     """(name, category, description) for every registered format, the
     `blq formats` listing (reference duck_hunt_formats() TVF surface,
-    commands/management.py:1033-1113). Category is recovered from each
-    parser's own `_event(tool, category, ...)` calls so the catalog can
-    never drift from parser behavior; description is the parser's
+    commands/management.py:1033-1113). A rule row states both. For a
+    hand-written parser the category is recovered from its own
+    `_event(tool, category, ...)` calls so the catalog can never drift
+    from parser behavior, and the description is the parser's
     docstring first line (empty when undocumented)."""
     import inspect
     from collections import Counter
 
     out = []
     for name, fn in FORMATS.items():
+        row = _ROW_BY_KEY.get(name)
+        if row is not None:
+            out.append((name, row.category, row.doc))
+            continue
         try:
             src = inspect.getsource(fn)
         except (OSError, TypeError):
@@ -1940,59 +1915,6 @@ def parse_mocha(lines: list[str]) -> Iterator[dict]:
         yield pending
 
 
-_PHPSTAN_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.php):(?P<line>\d+):(?P<msg>.+?)\.?$"
-)
-
-
-def parse_phpstan(lines: list[str]) -> Iterator[dict]:
-    """phpstan --error-format=raw: `/src/Foo.php:10:Call to undefined ...`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PHPSTAN_RE.match(ln)
-        if m:
-            yield _event(
-                "phpstan", "typecheck", "error", m["msg"], i,
-                file=m["file"], line=int(m["line"]),
-            )
-
-
-_PSALM_RE = re.compile(
-    r"^(?P<sev>ERROR|INFO): (?P<rule>\w+) - (?P<file>[^\s:]+):(?P<line>\d+):(?P<col>\d+) - (?P<msg>.*)$"
-)
-
-
-def parse_psalm(lines: list[str]) -> Iterator[dict]:
-    """psalm: `ERROR: UndefinedVariable - src/a.php:10:5 - Cannot find $x`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PSALM_RE.match(ln)
-        if m:
-            yield _event(
-                "psalm", "typecheck",
-                "error" if m["sev"] == "ERROR" else "info",
-                m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
-_DART_RE = re.compile(
-    r"^\s*(?P<sev>error|warning|info) (?:•|-) (?P<msg>.+?) (?:•|-) "
-    r"(?P<file>[^\s:]+\.dart):(?P<line>\d+):(?P<col>\d+) (?:•|-) (?P<rule>[\w_]+)\s*$"
-)
-
-
-def parse_dart_analyze(lines: list[str]) -> Iterator[dict]:
-    """dart analyze: `error • msg • lib/main.dart:10:5 • rule_name`."""
-    for i, ln in enumerate(lines, 1):
-        m = _DART_RE.match(ln)
-        if m:
-            yield _event(
-                "dart", "lint", _norm_severity(m["sev"]), m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
 _OCAML_FILE_RE = re.compile(
     r'^File "(?P<file>[^"]+)", line (?P<line>\d+), characters (?P<col>\d+)-\d+:'
 )
@@ -2048,23 +1970,6 @@ def parse_ghc(lines: list[str]) -> Iterator[dict]:
             pending = None
     if pending:
         yield pending
-
-
-_VERILATOR_RE = re.compile(
-    r"^%(?P<sev>Error|Warning)(?:-(?P<code>[A-Z]+))?: (?P<file>[^\s:]+):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>.*)$"
-)
-
-
-def parse_verilator(lines: list[str]) -> Iterator[dict]:
-    """verilator: `%Error: top.v:10:5: msg` / `%Warning-WIDTH: ...`."""
-    for i, ln in enumerate(lines, 1):
-        m = _VERILATOR_RE.match(ln)
-        if m:
-            yield _event(
-                "verilator", "compile", _norm_severity(m["sev"].lower()), m["msg"], i,
-                file=m["file"], line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None, code=m["code"],
-            )
 
 
 _BANDIT_ISSUE_RE = re.compile(
@@ -2160,24 +2065,6 @@ def parse_tflint(lines: list[str]) -> Iterator[dict]:
         )
 
 
-_SOLHINT_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.sol):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<sev>Error|Warning):\s*(?P<msg>.*?)\s*\[(?P<rule>[\w-]+)\]$"
-)
-
-
-def parse_solhint(lines: list[str]) -> Iterator[dict]:
-    """solhint: `contracts/Token.sol:10:5: Error: msg [rule]`."""
-    for i, ln in enumerate(lines, 1):
-        m = _SOLHINT_RE.match(ln)
-        if m:
-            yield _event(
-                "solhint", "lint", _norm_severity(m["sev"].lower()), m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
 _DENO_HEAD_RE = re.compile(
     r"^error: (?P<code>TS\d+) \[ERROR\]: (?P<msg>.*)$"
 )
@@ -2257,23 +2144,6 @@ def parse_ctest(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_SPHINX_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.(?:rst|md|txt|py)):(?P<line>\d+): (?P<sev>WARNING|ERROR|SEVERE): (?P<msg>.*)$"
-)
-
-
-def parse_sphinx(lines: list[str]) -> Iterator[dict]:
-    """sphinx-build: `/docs/index.rst:10: WARNING: undefined label: foo`."""
-    for i, ln in enumerate(lines, 1):
-        m = _SPHINX_RE.match(ln)
-        if m:
-            yield _event(
-                "sphinx", "docs",
-                "warning" if m["sev"] == "WARNING" else "error",
-                m["msg"], i, file=m["file"], line=int(m["line"]),
-            )
-
-
 _LATEX_ERR_RE = re.compile(r"^! (?P<msg>.*)$")
 _LATEX_LINE_RE = re.compile(r"^l\.(?P<line>\d+)")
 _LATEX_FILE_RE = re.compile(r"\(([^\s()]+\.tex)\b")
@@ -2303,58 +2173,26 @@ def parse_latex(lines: list[str]) -> Iterator[dict]:
                 pending = None
 
 
-_SPOTBUGS_RE = re.compile(
-    r"^[MH]\s+[A-Z]\s+(?P<rule>\w+): (?P<msg>.*?)\s+At (?P<file>[\w./$]+\.java):\[line (?P<line>\d+)\]$"
-)
-
-
-def parse_spotbugs(lines: list[str]) -> Iterator[dict]:
-    """spotbugs text: `M D NP: msg  At Foo.java:[line 10]`."""
-    for i, ln in enumerate(lines, 1):
-        m = _SPOTBUGS_RE.match(ln)
-        if m:
-            yield _event(
-                "spotbugs", "lint", "warning", m["msg"], i,
-                file=m["file"], line=int(m["line"]), rule=m["rule"],
-            )
-
-
-_PMD_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.java):(?P<line>\d+):\s*(?P<rule>\w+):\s*(?P<msg>.*)$"
-)
-
-
-def parse_pmd(lines: list[str]) -> Iterator[dict]:
-    """pmd text: `/src/Foo.java:10: UnusedLocalVariable: msg`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PMD_RE.match(ln)
-        if m:
-            yield _event(
-                "pmd", "lint", "warning", m["msg"], i,
-                file=m["file"], line=int(m["line"]), rule=m["rule"],
-            )
-
-
 FORMATS.update(
     {
         "mocha": parse_mocha,
-        "phpstan": parse_phpstan,
-        "psalm": parse_psalm,
-        "dart_analyze": parse_dart_analyze,
+        "phpstan": _ROW_PARSE["phpstan"],
+        "psalm": _ROW_PARSE["psalm"],
+        "dart_analyze": _ROW_PARSE["dart_analyze"],
         "ocaml": parse_ocaml,
         "ghc": parse_ghc,
-        "verilator": parse_verilator,
+        "verilator": _ROW_PARSE["verilator"],
         "bandit": parse_bandit,
         "gitleaks": parse_gitleaks,
         "tflint": parse_tflint,
-        "solhint": parse_solhint,
+        "solhint": _ROW_PARSE["solhint"],
         "deno": parse_deno,
         "checkov": parse_checkov,
         "ctest": parse_ctest,
-        "sphinx": parse_sphinx,
+        "sphinx": _ROW_PARSE["sphinx"],
         "latex": parse_latex,
-        "spotbugs": parse_spotbugs,
-        "pmd": parse_pmd,
+        "spotbugs": _ROW_PARSE["spotbugs"],
+        "pmd": _ROW_PARSE["pmd"],
     }
 )
 
@@ -2383,23 +2221,6 @@ _COMMAND_PATTERNS.extend(
 
 
 # --- batch 6 formats ---------------------------------------------------------
-
-_GO_BUILD_RE = re.compile(
-    r"^(?P<file>\.?/?[\w./-]+\.go):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>(?!.*\b(?:error|warning)\b:).+)$"
-)
-
-
-def parse_go_build(lines: list[str]) -> Iterator[dict]:
-    """go build / go vet: `./main.go:10:5: undefined: foo` — file:line:col
-    with NO severity keyword (which is why the gcc grammar misses it)."""
-    for i, ln in enumerate(lines, 1):
-        m = _GO_BUILD_RE.match(ln)
-        if m:
-            yield _event(
-                "go", "compile", "error", m["msg"], i,
-                file=m["file"], line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-            )
 
 
 _NODE_ERR_RE = re.compile(
@@ -2522,78 +2343,6 @@ def parse_clojure(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_PRETTIER_RE = re.compile(
-    r"^\[(?P<sev>error|warn)\] (?P<file>[^\s:]+): (?P<code>\w+): (?P<msg>.*?) \((?P<line>\d+):(?P<col>\d+)\)$"
-)
-
-
-def parse_prettier(lines: list[str]) -> Iterator[dict]:
-    """prettier: `[error] src/a.js: SyntaxError: msg (10:5)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PRETTIER_RE.match(ln)
-        if m:
-            yield _event(
-                "prettier", "format", _norm_severity(m["sev"]), m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                code=m["code"],
-            )
-
-
-_DMD_RE = re.compile(
-    r"^(?P<file>[^\s(]+\.di?)\((?P<line>\d+)(?:,(?P<col>\d+))?\):\s*"
-    r"(?P<sev>Error|Warning|Deprecation):\s*(?P<msg>.*)$"
-)
-
-
-def parse_dmd(lines: list[str]) -> Iterator[dict]:
-    """D (dmd/ldc): `src/app.d(10): Error: undefined identifier foo`."""
-    for i, ln in enumerate(lines, 1):
-        m = _DMD_RE.match(ln)
-        if m:
-            yield _event(
-                "dmd", "compile",
-                "error" if m["sev"] == "Error" else "warning",
-                m["msg"], i,
-                file=m["file"], line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-            )
-
-
-_NIM_RE = re.compile(
-    r"^(?P<file>[^\s(]+\.nim)\((?P<line>\d+), (?P<col>\d+)\)\s+"
-    r"(?P<sev>Error|Warning|Hint):\s*(?P<msg>.*)$"
-)
-
-
-def parse_nim(lines: list[str]) -> Iterator[dict]:
-    """nim: `src/main.nim(10, 5) Error: undeclared identifier: 'foo'`."""
-    for i, ln in enumerate(lines, 1):
-        m = _NIM_RE.match(ln)
-        if m:
-            sev = {"Error": "error", "Warning": "warning", "Hint": "info"}[m["sev"]]
-            yield _event(
-                "nim", "compile", sev, m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-            )
-
-
-_PASCAL_RE = re.compile(
-    r"^(?P<file>[^\s(]+\.(?:pas|pp|dpr))\((?P<line>\d+),(?P<col>\d+)\)\s+"
-    r"(?P<sev>Error|Warning|Note|Fatal):\s*(?P<msg>.*)$"
-)
-
-
-def parse_pascal(lines: list[str]) -> Iterator[dict]:
-    """fpc: `main.pas(10,5) Error: Identifier not found "foo"`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PASCAL_RE.match(ln)
-        if m:
-            yield _event(
-                "fpc", "compile", _norm_severity(m["sev"].lower()), m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-            )
-
-
 _ERLANG_RE = re.compile(
     r"^(?P<file>[^\s:]+\.erl):(?P<line>\d+)(?::(?P<col>\d+))?:\s*(?:(?P<sev>Warning):\s*)?(?P<msg>.*)$"
 )
@@ -2634,16 +2383,16 @@ def parse_playwright(lines: list[str]) -> Iterator[dict]:
 
 FORMATS.update(
     {
-        "go_build": parse_go_build,
+        "go_build": _ROW_PARSE["go_build"],
         "node_traceback": parse_node_traceback,
         "ruby_traceback": parse_ruby_traceback,
         "perl": parse_perl,
         "julia": parse_julia,
         "clojure": parse_clojure,
-        "prettier": parse_prettier,
-        "dmd": parse_dmd,
-        "nim": parse_nim,
-        "pascal": parse_pascal,
+        "prettier": _ROW_PARSE["prettier"],
+        "dmd": _ROW_PARSE["dmd"],
+        "nim": _ROW_PARSE["nim"],
+        "pascal": _ROW_PARSE["pascal"],
         "erlang": parse_erlang,
         "playwright": parse_playwright,
     }
@@ -2802,77 +2551,6 @@ def parse_python_unittest(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_SWIFTLINT_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.swift):(?P<line>\d+):(?P<col>\d+): "
-    r"(?P<sev>error|warning): (?P<msg>.*?) \((?P<rule>[\w_]+)\)$"
-)
-
-
-def parse_swiftlint(lines: list[str]) -> Iterator[dict]:
-    """swiftlint: swiftc shape + trailing `(rule_id)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _SWIFTLINT_RE.match(ln)
-        if m:
-            yield _event(
-                "swiftlint", "lint", _norm_severity(m["sev"]), m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
-_DETEKT_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.kts?):(?P<line>\d+):(?P<col>\d+): (?P<msg>.*?) \[(?P<rule>[\w.]+)\]$"
-)
-
-
-def parse_detekt(lines: list[str]) -> Iterator[dict]:
-    """detekt: `src/App.kt:10:5: msg [MagicNumber]` (no severity keyword)."""
-    for i, ln in enumerate(lines, 1):
-        m = _DETEKT_RE.match(ln)
-        if m:
-            yield _event(
-                "detekt", "lint", "warning", m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                rule=m["rule"],
-            )
-
-
-_SCALASTYLE_RE = re.compile(
-    r"^(?P<sev>error|warning) file=(?P<file>[^\s]+) message=(?P<msg>.*?)"
-    r"(?: line=(?P<line>\d+))?(?: column=(?P<col>\d+))?$"
-)
-
-
-def parse_scalastyle(lines: list[str]) -> Iterator[dict]:
-    """scalastyle: `error file=/p/Foo.scala message=msg line=10 column=5`."""
-    for i, ln in enumerate(lines, 1):
-        m = _SCALASTYLE_RE.match(ln)
-        if m:
-            yield _event(
-                "scalastyle", "lint", _norm_severity(m["sev"]), m["msg"], i,
-                file=m["file"],
-                line=int(m["line"]) if m["line"] else None,
-                col=int(m["col"]) if m["col"] else None,
-            )
-
-
-_PUPPET_RE = re.compile(
-    r"^(?P<sev>Error|Warning): (?P<msg>.*?) \(file: (?P<file>[^,]+), line: (?P<line>\d+)(?:, column: (?P<col>\d+))?\)$"
-)
-
-
-def parse_puppet(lines: list[str]) -> Iterator[dict]:
-    """puppet: `Error: msg (file: /p/site.pp, line: 10, column: 5)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PUPPET_RE.match(ln)
-        if m:
-            yield _event(
-                "puppet", "deploy", _norm_severity(m["sev"].lower()), m["msg"], i,
-                file=m["file"], line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-            )
-
-
 _XMLLINT_RE = re.compile(
     r"^(?P<file>[^\s:]+\.(?:xml|xsd|xsl|svg|html)):(?P<line>\d+): "
     r"(?P<kind>parser error|validity error|error|warning)\s*:\s*(?P<msg>.*)$"
@@ -2919,37 +2597,19 @@ def parse_go_panic(lines: list[str]) -> Iterator[dict]:
         yield pending
 
 
-_STATICCHECK_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.go):(?P<line>\d+):(?P<col>\d+): (?P<msg>.*?) \((?P<code>(?:S|SA|ST|U|QF)\d+)\)$"
-)
-
-
-def parse_staticcheck(lines: list[str]) -> Iterator[dict]:
-    """staticcheck: `main.go:10:5: msg (SA4006)` — go file:line:col with a
-    trailing check code, distinct from golangci-lint's `(lintername)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _STATICCHECK_RE.match(ln)
-        if m:
-            yield _event(
-                "staticcheck", "lint", "warning", m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                code=m["code"],
-            )
-
-
 FORMATS.update(
     {
-        "staticcheck": parse_staticcheck,
+        "staticcheck": _ROW_PARSE["staticcheck"],
         "gfortran": parse_gfortran,
         "scalatest": parse_scalatest,
         "tap": parse_tap,
         "googletest": parse_googletest,
         "catch2": parse_catch2,
         "python_unittest": parse_python_unittest,
-        "swiftlint": parse_swiftlint,
-        "detekt": parse_detekt,
-        "scalastyle": parse_scalastyle,
-        "puppet": parse_puppet,
+        "swiftlint": _ROW_PARSE["swiftlint"],
+        "detekt": _ROW_PARSE["detekt"],
+        "scalastyle": _ROW_PARSE["scalastyle"],
+        "puppet": _ROW_PARSE["puppet"],
         "xmllint": parse_xmllint,
         "go_panic": parse_go_panic,
     }
@@ -2974,21 +2634,6 @@ _COMMAND_PATTERNS.extend(
 
 
 # --- batch 8 formats ---------------------------------------------------------
-
-_MESON_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.build):(?P<line>\d+):(?P<col>\d+): (?P<sev>ERROR|WARNING): (?P<msg>.*)$"
-)
-
-
-def parse_meson(lines: list[str]) -> Iterator[dict]:
-    """meson: `meson.build:10:5: ERROR: msg`."""
-    for i, ln in enumerate(lines, 1):
-        m = _MESON_RE.match(ln)
-        if m:
-            yield _event(
-                "meson", "build", _norm_severity(m["sev"]), m["msg"], i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-            )
 
 
 _NINJA_FAILED_RE = re.compile(r"^FAILED: (?P<target>.+)$")
@@ -3039,56 +2684,6 @@ def parse_r_script(lines: list[str]) -> Iterator[dict]:
                 pending["fingerprint"] = fingerprint_of("r", pending["code"], ln.strip())
     if pending:
         yield pending
-
-
-_PSSA_RE = re.compile(
-    r"^(?P<rule>PS\w+)\s+(?P<sev>Error|Warning|Information)\s+(?P<file>[^\s]+\.psm?1)\s+(?P<line>\d+)\s+(?P<msg>.*)$"
-)
-
-
-def parse_psscriptanalyzer(lines: list[str]) -> Iterator[dict]:
-    """PSScriptAnalyzer table rows: `PSAvoidUsingCmdletAliases Warning
-    deploy.ps1 10 'gci' is an alias...`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PSSA_RE.match(ln)
-        if m:
-            yield _event(
-                "psscriptanalyzer", "lint",
-                "warning" if m["sev"] != "Error" else "error",
-                m["msg"], i,
-                file=m["file"], line=int(m["line"]), rule=m["rule"],
-            )
-
-
-_ANSIBLE_LINT_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.ya?ml):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
-    r"(?P<rule>[\w-]+(?:\[[\w-]+\])?):?\s+(?P<msg>.*)$"
-)
-
-
-def parse_ansible_lint(lines: list[str]) -> Iterator[dict]:
-    """ansible-lint: `playbook.yml:10: name[missing] All tasks should be named`."""
-    for i, ln in enumerate(lines, 1):
-        m = _ANSIBLE_LINT_RE.match(ln)
-        if m:
-            yield _event(
-                "ansible-lint", "lint", "warning", m["msg"], i,
-                file=m["file"], line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None, rule=m["rule"],
-            )
-
-
-_COMMITLINT_RE = re.compile(r"^\s*[✖x]\s+(?P<msg>.*?)\s+\[(?P<rule>[\w-]+)\]\s*$")
-
-
-def parse_commitlint(lines: list[str]) -> Iterator[dict]:
-    """commitlint: `✖  subject may not be empty [subject-empty]`."""
-    for i, ln in enumerate(lines, 1):
-        m = _COMMITLINT_RE.match(ln)
-        if m:
-            yield _event(
-                "commitlint", "lint", "error", m["msg"], i, rule=m["rule"]
-            )
 
 
 _HLINT_RE = re.compile(
@@ -3180,12 +2775,12 @@ def parse_nunit(lines: list[str]) -> Iterator[dict]:
 
 FORMATS.update(
     {
-        "meson": parse_meson,
+        "meson": _ROW_PARSE["meson"],
         "ninja": parse_ninja,
         "r_script": parse_r_script,
-        "psscriptanalyzer": parse_psscriptanalyzer,
-        "ansible_lint": parse_ansible_lint,
-        "commitlint": parse_commitlint,
+        "psscriptanalyzer": _ROW_PARSE["psscriptanalyzer"],
+        "ansible_lint": _ROW_PARSE["ansible_lint"],
+        "commitlint": _ROW_PARSE["commitlint"],
         "hlint": parse_hlint,
         "biome": parse_biome,
         "cypress": parse_cypress,

@@ -9,6 +9,13 @@ the whole plan stays inside WholeStageCodegen / JVM regex, which is the
 Spark-first answer to the reference's compiled duck_hunt C++ extension
 (consumed at src/blq/query.py:139-229).
 
+Two kinds of format. The stateless single-line formats are rows of
+`logparse._ROWS`: `_row_rule` compiles each row into its staged Column
+rule (and `_prefilter` its prefilter), while `logparse._row_parser`
+compiles the same row into the Python matcher — one definition, two
+execution modes. Every other format has a hand-written builder here,
+twin of its hand-written Python parser.
+
 Semantics contract: row-identical output to `logparse.parse_content`
 for each supported format, including the per-document fallback to the
 'generic' rules when a document yields no events for the requested
@@ -28,12 +35,15 @@ groupBy — one map-side-combinable shuffle, no self-join.
 
 from __future__ import annotations
 
+import re
 import threading
+from functools import partial
+from itertools import groupby
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from blq_cli_spark.sources.logparse import _SEVERITY_ALIASES
+from blq_cli_spark.sources.logparse import _ROWS, _SEVERITY_ALIASES, _Row
 
 # splitlines() approximation: the three common line endings. (Python
 # splitlines also splits on \v/\f/\x85/U+2028...; tool output never
@@ -384,7 +394,6 @@ def _carry(c: Column) -> Column:
     )
 
 
-
 # Group extraction strategy: regexp_extract re-RUNS the pattern once per
 # group, so a 5-group rule costs 6 regex executions per line. Instead
 # each rule's groups are staged ONCE per line: one regexp_replace
@@ -512,86 +521,67 @@ def _apply_staging(lines: DataFrame, pending: list[tuple[str, Column]]) -> DataF
     return out
 
 
-# --- per-format builders: lines df -> (staged lines, rules) ------------------
-
-_GCC = r"^([^\s:][^:]*):(\d+):(?:(\d+):)?\s*(fatal error|error|warning|note):\s*(.*)$"
+# --- the rule table: logparse._ROWS compiled to staged Column rules ----------
 
 
-def _r_gcc(lines: DataFrame):
-    # the pattern requires a severity word immediately followed by ':'
-    pre = _has("error:", "warning:", "note:")
-    staged = _stage(lines, "_g_gcc", _GCC, 5, pre)
-    g = lambda i: _g("_g_gcc", i)  # noqa: E731
-    ev = _ev(
-        "gcc", "compile", _sev(g(4)), g(5),
-        file=g(1), line=g(2), col=_opt(g(3)),
-    )
-    return staged, [(pre & _line().rlike(_GCC), ev)]
+def _prefilter(pre: tuple[tuple[str, ...], ...]) -> Column:
+    """A row's prefilter: AND over its clauses, OR within a clause. Each
+    run of "^"-prefixed literals becomes one _starts call and each run
+    of plain literals one _has call, so census atoms register in the
+    order the literals are written."""
+    out = None
+    for clause in pre:
+        c = None
+        for starts, run in groupby(clause, lambda s: s.startswith("^")):
+            one = _starts(*(s[1:] for s in run)) if starts else _has(*run)
+            c = one if c is None else c | one
+        out = c if out is None else out & c
+    return out
 
 
-_MYPY = (
-    r"^([^\s:][^:]*\.pyi?):(\d+)(?::(\d+))?:\s*"
-    r"(error|warning|note):\s*(.*?)(?:\s+\[([a-z0-9-]+)\])?$"
-)
+def _row_rule(row: _Row):
+    """Compile one rule row into its per-line builder: one staging
+    regexp_replace of the row's pattern with group names stripped,
+    group positions from groupindex. Every field but the message reads
+    through _opt: regexp_extract gives '' where `re` gives None for an
+    unmatched optional group, and in the row grammar only the message
+    group can match empty while participating."""
+    rx = re.compile(row.pattern)
+    pattern = re.sub(r"\(\?P<\w+>", "(", row.pattern)
+    name = f"_g_{row.key}"
+
+    def g(group: str) -> Column:
+        return _g(name, rx.groupindex[group])
+
+    def build(lines: DataFrame):
+        pre = _prefilter(row.pre)
+        staged = _stage(lines, name, pattern, rx.groups, pre)
+        sev = row.sev
+        if isinstance(sev, str):
+            sev_c = F.lit(sev)
+        elif sev.map is None:
+            sev_c = _sev(g(sev.group))
+        else:
+            sev_c = None
+            for value, out in sev.map.items():
+                sev_c = (F.when if sev_c is None else sev_c.when)(
+                    g(sev.group) == value, F.lit(out)
+                )
+            sev_c = sev_c.otherwise(F.lit(sev.default))
+        fields = {f: _opt(g(grp)) for f, grp in row.fields.items() if f != "message"}
+        ev = _ev(
+            row.tool, row.category, sev_c, g(row.fields["message"]),
+            event_type=row.event_type, **fields,
+        )
+        return staged, [(pre & _line().rlike(pattern), ev)]
+
+    return build
 
 
-def _r_mypy(lines: DataFrame):
-    pre = _has(".py") & _has("error:", "warning:", "note:")
-    staged = _stage(lines, "_g_mypy", _MYPY, 6, pre)
-    g = lambda i: _g("_g_mypy", i)  # noqa: E731
-    ev = _ev(
-        "mypy", "typecheck", _sev(g(4)), g(5),
-        file=g(1), line=g(2), col=_opt(g(3)),
-        code=_opt(g(6)),
-    )
-    return staged, [(pre & _line().rlike(_MYPY), ev)]
+_ROW_RULE = {r.key: _row_rule(r) for r in _ROWS}
 
 
-_TSC = (
-    r"^([^\s(][^(]*)\((\d+),(\d+)\):\s*(error|warning)\s+(TS\d+):\s*(.*)$"
-)
-
-
-def _r_tsc(lines: DataFrame):
-    pre = _has("TS") & _has("error", "warning")
-    staged = _stage(lines, "_g_tsc", _TSC, 6, pre)
-    g = lambda i: _g("_g_tsc", i)  # noqa: E731
-    ev = _ev(
-        "tsc", "compile", _sev(g(4)), g(6),
-        file=g(1), line=g(2), col=g(3), code=g(5),
-    )
-    return staged, [(pre & _line().rlike(_TSC), ev)]
-
-
-_MAVEN = r"^\[(ERROR|WARNING)\]\s+(?:([^\s\[]+):\[(\d+),(\d+)\]\s*)?(.+)$"
-
-
-def _r_maven(lines: DataFrame):
-    pre = _starts("[ERROR]", "[WARNING]")
-    staged = _stage(lines, "_g_mvn", _MAVEN, 5, pre)
-    g = lambda i: _g("_g_mvn", i)  # noqa: E731
-    ev = _ev(
-        "maven", "build", _sev(g(1)), g(5),
-        file=_opt(g(2)), line=_opt(g(3)), col=_opt(g(4)),
-    )
-    return staged, [(pre & _line().rlike(_MAVEN), ev)]
-
-
-_GOLANGCI = (
-    r"^([^\s:][^:]*\.go):(\d+):(?:(\d+):)?\s*(.*?)\s+\(([a-z][\w-]*)\)$"
-)
-
-
-def _r_golangci(lines: DataFrame):
-    pre = _has(".go:")
-    staged = _stage(lines, "_g_gci", _GOLANGCI, 5, pre)
-    g = lambda i: _g("_g_gci", i)  # noqa: E731
-    ev = _ev(
-        "golangci-lint", "lint", F.lit("warning"), g(4),
-        file=g(1), line=g(2), col=_opt(g(3)),
-        rule=g(5),
-    )
-    return staged, [(pre & _line().rlike(_GOLANGCI), ev)]
+# --- hand-written per-format builders: lines df -> (staged lines, rules) -----
 
 
 _GENERIC = r"(?i)\b(error|warning|fatal)\b[:\s]+(.*)$"
@@ -745,21 +735,6 @@ def _r_npm(lines: DataFrame):
     return staged, [(emit, ev)]
 
 
-_RUFF = r"^([^\s:][^:]*):(\d+):(\d+):\s*([A-Z]{1,4}\d{3,4})\s+(?:\[\*\]\s+)?(.*)$"
-
-
-def _r_ruff(lines: DataFrame):
-    pre = _has(":")  # file:line:col: — weak but free; prunes prose lines
-    staged = _stage(lines, "_g_ruff", _RUFF, 5, pre)
-    g = lambda i: _g("_g_ruff", i)  # noqa: E731
-    ev = _ev(
-        "ruff", "lint", F.lit("warning"), g(5),
-        file=g(1), line=g(2), col=g(3),
-        code=g(4), rule=g(4),
-    )
-    return staged, [(pre & _line().rlike(_RUFF), ev)]
-
-
 _FLAKE8 = r"^([^\s:][^:]*):(\d+):(\d+):\s*([EWFC]\d{3})\s+(.*)$"
 
 
@@ -800,76 +775,7 @@ def _r_pylint(lines: DataFrame):
     return staged, [(pre & _line().rlike(_PYLINT), ev)]
 
 
-# --- round-7 formats: the next seven single-line / carry / span shapes -------
-
-_CLANG_TIDY = (
-    r"^([^\s:][^:]*):(\d+):(\d+):\s*(error|warning|note):\s*(.*?)\s*\[([\w.,-]+)\]$"
-)
-
-
-def _r_clang_tidy(lines: DataFrame):
-    pre = _has("error:", "warning:", "note:") & _has("[")
-    staged = _stage(lines, "_g_ct", _CLANG_TIDY, 6, pre)
-    g = lambda i: _g("_g_ct", i)  # noqa: E731
-    ev = _ev(
-        "clang-tidy", "lint", _sev(g(4)), g(5),
-        file=g(1), line=g(2), col=g(3), rule=g(6),
-    )
-    return staged, [(pre & _line().rlike(_CLANG_TIDY), ev)]
-
-
-_SWIFTC = (
-    r"^([^\s:][^:]*\.swift):(\d+):(\d+):\s*(error|warning|note):\s*(.*)$"
-)
-
-
-def _r_swiftc(lines: DataFrame):
-    pre = _has(".swift:") & _has("error:", "warning:", "note:")
-    staged = _stage(lines, "_g_sw", _SWIFTC, 5, pre)
-    g = lambda i: _g("_g_sw", i)  # noqa: E731
-    ev = _ev(
-        "swiftc", "compile", _sev(g(4)), g(5),
-        file=g(1), line=g(2), col=g(3),
-    )
-    return staged, [(pre & _line().rlike(_SWIFTC), ev)]
-
-
-_RUBOCOP = (
-    r"^([^\s:][^:]*\.rb):(\d+):(\d+):\s*([CWEF]):\s*"
-    r"(?:\[Correctable\]\s*)?([\w/]+):\s*(.*)$"
-)
-
-
-def _r_rubocop(lines: DataFrame):
-    pre = _has(".rb:")
-    staged = _stage(lines, "_g_rc", _RUBOCOP, 6, pre)
-    g = lambda i: _g("_g_rc", i)  # noqa: E731
-    sev = F.when(g(4).isin("E", "F"), F.lit("error")).otherwise(F.lit("warning"))
-    ev = _ev(
-        "rubocop", "lint", sev, g(6),
-        file=g(1), line=g(2), col=g(3), rule=g(5),
-    )
-    return staged, [(pre & _line().rlike(_RUBOCOP), ev)]
-
-
-# negative lookahead (java.util.regex supports it): go build/vet lines
-# carry NO severity keyword — that is exactly why the gcc grammar misses
-# them, and the lookahead keeps gcc-shaped lines out of this rule
-_GO_BUILD = (
-    r"^(\.?/?[\w./-]+\.go):(\d+):(?:(\d+):)?\s*"
-    r"((?!.*\b(?:error|warning)\b:).+)$"
-)
-
-
-def _r_go_build(lines: DataFrame):
-    pre = _has(".go:")
-    staged = _stage(lines, "_g_gb", _GO_BUILD, 4, pre)
-    g = lambda i: _g("_g_gb", i)  # noqa: E731
-    ev = _ev(
-        "go", "compile", F.lit("error"), g(4),
-        file=g(1), line=g(2), col=_opt(g(3)),
-    )
-    return staged, [(pre & _line().rlike(_GO_BUILD), ev)]
+# --- round-7 formats: the file-header carry shapes ----------------------------
 
 
 _YAMLLINT_FILE = r"^([^\s].*\.ya?ml)$"
@@ -928,40 +834,6 @@ def _r_shellcheck(lines: DataFrame):
     return staged, [(cond, ev)]
 
 
-_CHECKSTYLE = (
-    r"^\[(ERROR|WARN|INFO)\]\s+([^\s:]+):(\d+)(?::(\d+))?:\s*"
-    r"(.*?)\s*\[(\w+)\]$"
-)
-
-
-def _r_checkstyle(lines: DataFrame):
-    pre = _starts("[ERROR]", "[WARN]", "[INFO]")
-    staged = _stage(lines, "_g_cs", _CHECKSTYLE, 6, pre)
-    g = lambda i: _g("_g_cs", i)  # noqa: E731
-    ev = _ev(
-        "checkstyle", "lint", _sev(g(1)), g(5),
-        file=g(2), line=g(3), col=_opt(g(4)), rule=g(6),
-    )
-    return staged, [(pre & _line().rlike(_CHECKSTYLE), ev)]
-
-
-_HADOLINT = (
-    r"^([^\s:]+):(\d+)\s+(DL\d+|SC\d+)\s+(error|warning|info|style):\s*(.*)$"
-)
-
-
-def _r_hadolint(lines: DataFrame):
-    pre = _has("DL", "SC")
-    staged = _stage(lines, "_g_hl", _HADOLINT, 5, pre)
-    g = lambda i: _g("_g_hl", i)  # noqa: E731
-    sev = F.when(g(4).isin("info", "style"), F.lit("warning")).otherwise(g(4))
-    ev = _ev(
-        "hadolint", "lint", _sev(sev), g(5),
-        file=g(1), line=g(2), code=g(3),
-    )
-    return staged, [(pre & _line().rlike(_HADOLINT), ev)]
-
-
 _SQLFLUFF_FILE = r"^==\s*\[([^\]]+)\]\s*(?:FAIL|PASS)(?s:.*)$"  # total for staging
 _SQLFLUFF_FILE_GUARD = r"^==\s*\[([^\]]+)\]\s*(?:FAIL|PASS)"
 _SQLFLUFF_ISSUE = r"^L:\s*(\d+)\s*\|\s*P:\s*(\d+)\s*\|\s*(\w+)\s*\|\s*(.*)$"
@@ -999,62 +871,6 @@ def _r_luacheck(lines: DataFrame):
         file=g(1), line=g(2), col=g(3), code=F.concat(g(4), g(5)),
     )
     return staged, [(pre & _line().rlike(_LUACHECK), ev)]
-
-
-_CPPCHECK = (
-    r"^([^\s:][^:]*):(\d+)(?::(\d+))?:\s*"
-    r"(error|warning|style|performance|portability|information):\s*"
-    r"(.*?)\s*\[(\w+)\]$"
-)
-
-
-def _r_cppcheck(lines: DataFrame):
-    pre = _has("[") & _has(
-        "error:", "warning:", "style:", "performance:", "portability:",
-        "information:",
-    )
-    staged = _stage(lines, "_g_cpc", _CPPCHECK, 6, pre)
-    g = lambda i: _g("_g_cpc", i)  # noqa: E731
-    sev = F.when(g(4).isin("error", "warning"), g(4)).otherwise(F.lit("warning"))
-    ev = _ev(
-        "cppcheck", "lint", _sev(sev), g(5),
-        file=g(1), line=g(2), col=_opt(g(3)), code=g(6),
-    )
-    return staged, [(pre & _line().rlike(_CPPCHECK), ev)]
-
-
-_MDLINT = (
-    r"^([^\s:][^:]*\.(?:md|markdown)):(\d+)(?::(\d+))?\s+"
-    r"(MD\d+)(?:/([\w-]+))?\s+(.*)$"
-)
-
-
-def _r_markdownlint(lines: DataFrame):
-    pre = _has(".md:", ".markdown:") & _has("MD")
-    staged = _stage(lines, "_g_md", _MDLINT, 6, pre)
-    g = lambda i: _g("_g_md", i)  # noqa: E731
-    ev = _ev(
-        "markdownlint", "lint", F.lit("warning"), g(6),
-        file=g(1), line=g(2), col=_opt(g(3)), code=g(4), rule=_opt(g(5)),
-    )
-    return staged, [(pre & _line().rlike(_MDLINT), ev)]
-
-
-_SBT = (
-    r"^\[(error|warn)\]\s+([^\s:]+\.scala):(\d+):(?:(\d+):)?\s*(.*)$"
-)
-
-
-def _r_sbt(lines: DataFrame):
-    pre = _starts("[error]", "[warn]") & _has(".scala:")
-    staged = _stage(lines, "_g_sbt", _SBT, 5, pre)
-    g = lambda i: _g("_g_sbt", i)  # noqa: E731
-    sev = F.when(g(1) == "error", F.lit("error")).otherwise(F.lit("warning"))
-    ev = _ev(
-        "scalac", "compile", sev, g(5),
-        file=g(2), line=g(3), col=_opt(g(4)),
-    )
-    return staged, [(pre & _line().rlike(_SBT), ev)]
 
 
 # --- round-7 batch 4: the test-framework family -------------------------------
@@ -1407,308 +1223,142 @@ def _f_mocha(lines: DataFrame) -> DataFrame:
     return agg.filter(F.col("head").isNotNull()).select("source_id", ev.alias("ev"))
 
 
+# --- single-line formats a rule row cannot express ----------------------------
+# One pattern, one event per matching line, like the rule rows of
+# logparse._ROWS — but each needs something a row has no field for: a
+# computed message, an extra guard, a prefix/contains-based severity or
+# a rewritten code. The fixture sweep pins each against its Python twin.
 
-
-# --- round-7 batch 5: the stateless single-line catalog -----------------------
-# One helper covers every "one pattern, one event" format: staging +
-# prefilter + rlike guard + event construction, with optional extra
-# guard. Severity ladders and field mappings mirror the Python parsers
-# exactly (the fixture sweep pins each one).
-
-
-def _simple(name, pattern, n, pre_fn, ev_fn, guard_fn=None):
-    def build(lines: DataFrame):
-        pre = pre_fn()
-        col = f"_g_{name}"
-        staged = _stage(lines, col, pattern, n, pre)
-        g = lambda i: _g(col, i)  # noqa: E731
-        cond = pre & _line().rlike(pattern)
-        if guard_fn is not None:
-            cond = cond & guard_fn(g)
-        return staged, [(cond, ev_fn(g))]
-
-    build.__name__ = f"_r_{name}"
-    build.pre_fn = pre_fn  # the auto-detect candidate pass reuses it
-    return build
-
-
-_ACTIONLINT = r"^([^\s:]+\.ya?ml):(\d+):(\d+):\s*(.*?)\s*\[([\w-]+)\]$"
-_ANSIBLE_LINT = (
-    r"^([^\s:]+\.ya?ml):(\d+):(?:(\d+):)?\s*([\w-]+(?:\[[\w-]+\])?):?\s+(.*)$"
-)
-_BAZEL = r"^(ERROR|WARNING): (/[^\s:]+/BUILD(?:\.bazel)?):(\d+):(\d+):\s*(.*)$"
 _BIOME = (
     r"^([^\s:]+):(\d+):(\d+) (lint/[\w/]+|format|organizeImports)\s+(?:━+\s*)?(.*)$"
 )
-_COMMITLINT = r"^\s*[✖x]\s+(.*?)\s+\[([\w-]+)\]\s*$"
-_DART = (
-    r"^\s*(error|warning|info) (?:•|-) (.+?) (?:•|-) "
-    r"([^\s:]+\.dart):(\d+):(\d+) (?:•|-) ([\w_]+)\s*$"
-)
-_DETEKT = r"^([^\s:]+\.kts?):(\d+):(\d+): (.*?) \[([\w.]+)\]$"
-_DMD = r"^([^\s(]+\.di?)\((\d+)(?:,(\d+))?\):\s*(Error|Warning|Deprecation):\s*(.*)$"
+
+
+def _r_biome(lines: DataFrame):
+    pre = _has("lint/", "format", "organizeImports")
+    staged = _stage(lines, "_g_bio", _BIOME, 5, pre)
+    g = lambda i: _g("_g_bio", i)  # noqa: E731
+    ev = _ev(
+        "biome", "lint", F.lit("warning"), F.coalesce(_opt(_strip(g(5))), g(4)),
+        file=g(1), line=g(2), col=g(3), rule=g(4),
+    )
+    return staged, [(pre & _line().rlike(_BIOME), ev)]
+
+
 _ERLANG = r"^([^\s:]+\.erl):(\d+)(?::(\d+))?:\s*(?:(Warning):\s*)?(.*)$"
-_KOTLINC = r"^([ew]): ([^:]+\.kts?): \((\d+), (\d+)\): (.*)$"
-_KTLINT = r"^([^\s:][^:]*\.kts?):(\d+):(\d+):\s*(.*?)\s*\(([\w:-]+)\)$"
-_MESON = r"^([^\s:]+\.build):(\d+):(\d+): (ERROR|WARNING): (.*)$"
+
+
+def _r_erlang(lines: DataFrame):
+    pre = _has(".erl:")
+    staged = _stage(lines, "_g_erl", _ERLANG, 5, pre)
+    g = lambda i: _g("_g_erl", i)  # noqa: E731
+    sev = F.when(_opt(g(4)).isNotNull(), F.lit("warning")).otherwise(F.lit("error"))
+    ev = _ev(
+        "erlang", "compile", sev, g(5),
+        file=g(1), line=g(2), col=_opt(g(3)),
+    )
+    return staged, [(pre & _line().rlike(_ERLANG) & (g(5) != ""), ev)]
+
+
 _MSBUILD = (
     r"^([^\s(][^(]*)\((\d+),(\d+)\):\s*(error|warning)\s+"
     r"([A-Z]{1,3}\d{3,5}):\s*(.*?)(?:\s+\[[^\]]+\])?$"
 )
-_NIM = r"^([^\s(]+\.nim)\((\d+), (\d+)\)\s+(Error|Warning|Hint):\s*(.*)$"
-_NVCC = r"^([^\s(]+\.(?:cu|cuh|cpp|h))\((\d+)\):\s*(error|warning):\s*(.*)$"
-_PASCAL = (
-    r"^([^\s(]+\.(?:pas|pp|dpr))\((\d+),(\d+)\)\s+(Error|Warning|Note|Fatal):\s*(.*)$"
-)
+
+
+def _r_msbuild(lines: DataFrame):
+    pre = _has("error", "warning") & _has("(")
+    staged = _stage(lines, "_g_msb", _MSBUILD, 6, pre)
+    g = lambda i: _g("_g_msb", i)  # noqa: E731
+    ev = _ev(
+        "msbuild", "compile", _sev(g(4)), g(6),
+        file=g(1), line=g(2), col=g(3), code=g(5),
+    )
+    # tsc shares the shape: its TS-prefixed codes belong to tsc
+    cond = pre & _line().rlike(_MSBUILD) & ~g(5).startswith("TS")
+    return staged, [(cond, ev)]
+
+
 _PERL = r"^(.+?) at ([^\s]+\.p[lm]) line (\d+)(?:, near \"([^\"]*)\")?\.?$"
+
+
+def _r_perl(lines: DataFrame):
+    pre = _has(" at ") & _has(" line ")
+    staged = _stage(lines, "_g_prl", _PERL, 3, pre)
+    g = lambda i: _g("_g_prl", i)  # noqa: E731
+    msg = F.lower(g(1))
+    sev = F.when(
+        msg.startswith("use of uninitialized") | msg.startswith("name "),
+        F.lit("warning"),
+    ).otherwise(F.lit("error"))
+    ev = _ev("perl", "runtime", sev, g(1), file=g(2), line=g(3))
+    return staged, [(pre & _line().rlike(_PERL), ev)]
+
+
 _PHP_LINT = (
     r"^PHP (Parse error|Fatal error|Warning|Deprecated):\s*(.*?) in ([^\s]+) on line (\d+)$"
 )
-_PHPSTAN = r"^([^\s:]+\.php):(\d+):(.+?)\.?$"
+
+
+def _r_php_lint(lines: DataFrame):
+    pre = _starts("PHP ")
+    staged = _stage(lines, "_g_php", _PHP_LINT, 4, pre)
+    g = lambda i: _g("_g_php", i)  # noqa: E731
+    sev = F.when(F.contains(F.lower(g(1)), F.lit("error")), F.lit("error")).otherwise(
+        F.lit("warning")
+    )
+    ev = _ev("php", "compile", sev, g(2), file=g(3), line=g(4), code=g(1))
+    return staged, [(pre & _line().rlike(_PHP_LINT), ev)]
+
+
 _PLAYWRIGHT = r"^\s*\d+\) \[([\w-]+)\] › ([^\s:]+):(\d+):(\d+) › (.+?)\s*$"
-_PMD = r"^([^\s:]+\.java):(\d+):\s*(\w+):\s*(.*)$"
-_PRETTIER = r"^\[(error|warn)\] ([^\s:]+): (\w+): (.*?) \((\d+):(\d+)\)$"
-_PROTOC = r"^([^\s:]+\.proto):(\d+):(\d+):\s*(.*)$"
-_PSALM = r"^(ERROR|INFO): (\w+) - ([^\s:]+):(\d+):(\d+) - (.*)$"
-_PSSA = r"^(PS\w+)\s+(Error|Warning|Information)\s+([^\s]+\.psm?1)\s+(\d+)\s+(.*)$"
-_PUPPET = r"^(Error|Warning): (.*?) \(file: ([^,]+), line: (\d+)(?:, column: (\d+))?\)$"
+
+
+def _r_playwright(lines: DataFrame):
+    pre = _has("›")
+    staged = _stage(lines, "_g_plw", _PLAYWRIGHT, 5, pre)
+    g = lambda i: _g("_g_plw", i)  # noqa: E731
+    ev = _ev(
+        "playwright", "test", F.lit("error"), F.concat(F.lit("failed: "), g(5)),
+        file=g(2), line=g(3), col=g(4),
+        test_name=g(5), code=g(1), event_type="test_result",
+    )
+    return staged, [(pre & _line().rlike(_PLAYWRIGHT), ev)]
+
+
 _RUBY_TB = r"^([^\s:]+\.rb):(\d+):in [`\']([^\']+)\'?:?\s*(.*?)\s*(?:\((\w+)\))?$"
-_SCALASTYLE = (
-    r"^(error|warning) file=([^\s]+) message=(.*?)(?: line=(\d+))?(?: column=(\d+))?$"
-)
-_SOLHINT = r"^([^\s:]+\.sol):(\d+):(\d+):\s*(Error|Warning):\s*(.*?)\s*\[([\w-]+)\]$"
-_SPHINX = r"^([^\s:]+\.(?:rst|md|txt|py)):(\d+): (WARNING|ERROR|SEVERE): (.*)$"
-_SPOTBUGS = r"^[MH]\s+[A-Z]\s+(\w+): (.*?)\s+At ([\w./$]+\.java):\[line (\d+)\]$"
-_STATICCHECK = r"^([^\s:]+\.go):(\d+):(\d+): (.*?) \(((?:S|SA|ST|U|QF)\d+)\)$"
-_SWIFTLINT = (
-    r"^([^\s:]+\.swift):(\d+):(\d+): (error|warning): (.*?) \(([\w_]+)\)$"
-)
-_VERILATOR = r"^%(Error|Warning)(?:-([A-Z]+))?: ([^\s:]+):(\d+):(?:(\d+):)?\s*(.*)$"
+
+
+def _r_ruby_traceback(lines: DataFrame):
+    pre = _has(".rb:") & _has("in ")
+    staged = _stage(lines, "_g_rtb", _RUBY_TB, 5, pre)
+    g = lambda i: _g("_g_rtb", i)  # noqa: E731
+    ev = _ev("ruby", "runtime", F.lit("error"), g(4), file=g(1), line=g(2), code=g(5))
+    cond = pre & _line().rlike(_RUBY_TB) & (
+        _opt(g(4)).isNotNull() & _opt(g(5)).isNotNull()
+    )
+    return staged, [(cond, ev)]
+
+
 _XMLLINT = (
     r"^([^\s:]+\.(?:xml|xsd|xsl|svg|html)):(\d+): "
     r"(parser error|validity error|error|warning)\s*:\s*(.*)$"
 )
-_ZIG = r"^([^\s:]+\.zig):(\d+):(\d+):\s*(error|note):\s*(.*)$"
 
 
-def _batch5_formats() -> dict:
-    return {
-        "actionlint": _simple(
-            "al", _ACTIONLINT, 5, lambda: _has(".yml:", ".yaml:") & _has("["),
-            lambda g: _ev("actionlint", "lint", F.lit("error"), g(4),
-                          file=g(1), line=g(2), col=g(3), rule=g(5)),
-        ),
-        "ansible_lint": _simple(
-            "anl", _ANSIBLE_LINT, 5, lambda: _has(".yml:", ".yaml:"),
-            lambda g: _ev("ansible-lint", "lint", F.lit("warning"), g(5),
-                          file=g(1), line=g(2), col=_opt(g(3)), rule=g(4)),
-        ),
-        "bazel": _simple(
-            "bzl", _BAZEL, 5,
-            lambda: _starts("ERROR: ", "WARNING: ") & _has("BUILD"),
-            lambda g: _ev("bazel", "build", _sev(g(1)), g(5),
-                          file=g(2), line=g(3), col=g(4)),
-        ),
-        "biome": _simple(
-            "bio", _BIOME, 5,
-            lambda: _has("lint/", "format", "organizeImports"),
-            lambda g: _ev("biome", "lint", F.lit("warning"),
-                          F.coalesce(_opt(_strip(g(5))), g(4)),
-                          file=g(1), line=g(2), col=g(3), rule=g(4)),
-        ),
-        "commitlint": _simple(
-            "cml", _COMMITLINT, 2, lambda: _has("✖", "x") & _has("["),
-            lambda g: _ev("commitlint", "lint", F.lit("error"), g(1), rule=g(2)),
-        ),
-        "dart_analyze": _simple(
-            "drt", _DART, 6, lambda: _has(".dart:"),
-            lambda g: _ev("dart", "lint", _sev(g(1)), g(2),
-                          file=g(3), line=g(4), col=g(5), rule=g(6)),
-        ),
-        "detekt": _simple(
-            "dtk", _DETEKT, 5, lambda: _has(".kt") & _has("["),
-            lambda g: _ev("detekt", "lint", F.lit("warning"), g(4),
-                          file=g(1), line=g(2), col=g(3), rule=g(5)),
-        ),
-        "dmd": _simple(
-            "dmd", _DMD, 5,
-            lambda: _has("Error:", "Warning:", "Deprecation:") & _has("("),
-            lambda g: _ev("dmd", "compile",
-                          F.when(g(4) == "Error", F.lit("error")).otherwise(F.lit("warning")),
-                          g(5), file=g(1), line=g(2), col=_opt(g(3))),
-        ),
-        "erlang": _simple(
-            "erl", _ERLANG, 5, lambda: _has(".erl:"),
-            lambda g: _ev("erlang", "compile",
-                          F.when(_opt(g(4)).isNotNull(), F.lit("warning")).otherwise(F.lit("error")),
-                          g(5), file=g(1), line=g(2), col=_opt(g(3))),
-            guard_fn=lambda g: g(5) != "",
-        ),
-        "kotlinc": _simple(
-            "ktc", _KOTLINC, 5, lambda: _starts("e: ", "w: "),
-            lambda g: _ev("kotlinc", "compile",
-                          F.when(g(1) == "e", F.lit("error")).otherwise(F.lit("warning")),
-                          g(5), file=g(2), line=g(3), col=g(4)),
-        ),
-        "ktlint": _simple(
-            "ktl", _KTLINT, 5, lambda: _has(".kt") & _has("("),
-            lambda g: _ev("ktlint", "lint", F.lit("warning"), g(4),
-                          file=g(1), line=g(2), col=g(3), rule=g(5)),
-        ),
-        "meson": _simple(
-            "msn", _MESON, 5, lambda: _has(".build:"),
-            lambda g: _ev("meson", "build", _sev(g(4)), g(5),
-                          file=g(1), line=g(2), col=g(3)),
-        ),
-        "msbuild": _simple(
-            "msb", _MSBUILD, 6, lambda: _has("error", "warning") & _has("("),
-            lambda g: _ev("msbuild", "compile", _sev(g(4)), g(6),
-                          file=g(1), line=g(2), col=g(3), code=g(5)),
-            guard_fn=lambda g: ~g(5).startswith("TS"),  # tsc shares the shape
-        ),
-        "nim": _simple(
-            "nim", _NIM, 5, lambda: _has(".nim("),
-            lambda g: _ev("nim", "compile",
-                          F.when(g(4) == "Error", F.lit("error"))
-                          .when(g(4) == "Warning", F.lit("warning"))
-                          .otherwise(F.lit("info")),
-                          g(5), file=g(1), line=g(2), col=g(3)),
-        ),
-        "nvcc": _simple(
-            "nvc", _NVCC, 4, lambda: _has("(") & _has("error:", "warning:"),
-            lambda g: _ev("nvcc", "compile", _sev(g(3)), g(4),
-                          file=g(1), line=g(2)),
-        ),
-        "pascal": _simple(
-            "fpc", _PASCAL, 5,
-            lambda: _has(".pas(", ".pp(", ".dpr("),
-            lambda g: _ev("fpc", "compile", _sev(g(4)), g(5),
-                          file=g(1), line=g(2), col=g(3)),
-        ),
-        "perl": _simple(
-            "prl", _PERL, 3, lambda: _has(" at ") & _has(" line "),
-            lambda g: _ev("perl", "runtime",
-                          F.when(
-                              F.lower(g(1)).startswith("use of uninitialized")
-                              | F.lower(g(1)).startswith("name "),
-                              F.lit("warning"),
-                          ).otherwise(F.lit("error")),
-                          g(1), file=g(2), line=g(3)),
-        ),
-        "php_lint": _simple(
-            "php", _PHP_LINT, 4, lambda: _starts("PHP "),
-            lambda g: _ev("php", "compile",
-                          F.when(F.contains(F.lower(g(1)), F.lit("error")),
-                                 F.lit("error")).otherwise(F.lit("warning")),
-                          g(2), file=g(3), line=g(4), code=g(1)),
-        ),
-        "phpstan": _simple(
-            "phs", _PHPSTAN, 3, lambda: _has(".php:"),
-            lambda g: _ev("phpstan", "typecheck", F.lit("error"), g(3),
-                          file=g(1), line=g(2)),
-        ),
-        "playwright": _simple(
-            "plw", _PLAYWRIGHT, 5, lambda: _has("›"),
-            lambda g: _ev("playwright", "test", F.lit("error"),
-                          F.concat(F.lit("failed: "), g(5)),
-                          file=g(2), line=g(3), col=g(4),
-                          test_name=g(5), code=g(1), event_type="test_result"),
-        ),
-        "pmd": _simple(
-            "pmd", _PMD, 4, lambda: _has(".java:"),
-            lambda g: _ev("pmd", "lint", F.lit("warning"), g(4),
-                          file=g(1), line=g(2), rule=g(3)),
-        ),
-        "prettier": _simple(
-            "ptr", _PRETTIER, 6, lambda: _starts("[error]", "[warn]"),
-            lambda g: _ev("prettier", "format", _sev(g(1)), g(4),
-                          file=g(2), line=g(5), col=g(6), code=g(3)),
-        ),
-        "protoc": _simple(
-            "ptc", _PROTOC, 4, lambda: _has(".proto:"),
-            lambda g: _ev("protoc", "compile", F.lit("error"), g(4),
-                          file=g(1), line=g(2), col=g(3)),
-        ),
-        "psalm": _simple(
-            "psm", _PSALM, 6, lambda: _starts("ERROR: ", "INFO: "),
-            lambda g: _ev("psalm", "typecheck",
-                          F.when(g(1) == "ERROR", F.lit("error")).otherwise(F.lit("info")),
-                          g(6), file=g(3), line=g(4), col=g(5), rule=g(2)),
-        ),
-        "psscriptanalyzer": _simple(
-            "pss", _PSSA, 5, lambda: _starts("PS"),
-            lambda g: _ev("psscriptanalyzer", "lint",
-                          F.when(g(2) == "Error", F.lit("error")).otherwise(F.lit("warning")),
-                          g(5), file=g(3), line=g(4), rule=g(1)),
-        ),
-        "puppet": _simple(
-            "pup", _PUPPET, 5,
-            lambda: _starts("Error: ", "Warning: ") & _has("(file:"),
-            lambda g: _ev("puppet", "deploy", _sev(g(1)), g(2),
-                          file=g(3), line=g(4), col=_opt(g(5))),
-        ),
-        "ruby_traceback": _simple(
-            "rtb", _RUBY_TB, 5, lambda: _has(".rb:") & _has("in "),
-            lambda g: _ev("ruby", "runtime", F.lit("error"), g(4),
-                          file=g(1), line=g(2), code=g(5)),
-            guard_fn=lambda g: (_opt(g(4)).isNotNull()) & (_opt(g(5)).isNotNull()),
-        ),
-        "scalastyle": _simple(
-            "scs", _SCALASTYLE, 5,
-            lambda: _starts("error file=", "warning file="),
-            lambda g: _ev("scalastyle", "lint", _sev(g(1)), g(3),
-                          file=g(2), line=_opt(g(4)), col=_opt(g(5))),
-        ),
-        "solhint": _simple(
-            "sol", _SOLHINT, 6, lambda: _has(".sol:"),
-            lambda g: _ev("solhint", "lint", _sev(g(4)), g(5),
-                          file=g(1), line=g(2), col=g(3), rule=g(6)),
-        ),
-        "sphinx": _simple(
-            "sph", _SPHINX, 4,
-            lambda: _has("WARNING:", "ERROR:", "SEVERE:"),
-            lambda g: _ev("sphinx", "docs",
-                          F.when(g(3) == "WARNING", F.lit("warning")).otherwise(F.lit("error")),
-                          g(4), file=g(1), line=g(2)),
-        ),
-        "spotbugs": _simple(
-            "spb", _SPOTBUGS, 4, lambda: _has("At ") & _has(".java:[line"),
-            lambda g: _ev("spotbugs", "lint", F.lit("warning"), g(2),
-                          file=g(3), line=g(4), rule=g(1)),
-        ),
-        "staticcheck": _simple(
-            "stc", _STATICCHECK, 5, lambda: _has(".go:") & _has("("),
-            lambda g: _ev("staticcheck", "lint", F.lit("warning"), g(4),
-                          file=g(1), line=g(2), col=g(3), code=g(5)),
-        ),
-        "swiftlint": _simple(
-            "swl", _SWIFTLINT, 6, lambda: _has(".swift:") & _has("("),
-            lambda g: _ev("swiftlint", "lint", _sev(g(4)), g(5),
-                          file=g(1), line=g(2), col=g(3), rule=g(6)),
-        ),
-        "verilator": _simple(
-            "vrl", _VERILATOR, 6, lambda: _starts("%Error", "%Warning"),
-            lambda g: _ev("verilator", "compile", _sev(g(1)), g(6),
-                          file=g(3), line=g(4), col=_opt(g(5)), code=_opt(g(2))),
-        ),
-        "xmllint": _simple(
-            # the file group's extension is always followed by ':', so
-            # the ext-colon literals are implied by the regex and keep
-            # the xmllint staging off generic "error" lines
-            "xml", _XMLLINT, 4,
-            lambda: _has(".xml:", ".xsd:", ".xsl:", ".svg:", ".html:")
-            & _has("error", "warning"),
-            lambda g: _ev("xmllint", "lint",
-                          F.when(g(3) == "warning", F.lit("warning")).otherwise(F.lit("error")),
-                          g(4), file=g(1), line=g(2),
-                          code=F.replace(g(3), F.lit(" "), F.lit("_"))),
-        ),
-        "zig": _simple(
-            "zig", _ZIG, 5, lambda: _has(".zig:"),
-            lambda g: _ev("zig", "compile", _sev(g(4)), g(5),
-                          file=g(1), line=g(2), col=g(3)),
-        ),
-    }
+def _r_xmllint(lines: DataFrame):
+    # the file group's extension is always followed by ':', so the
+    # ext-colon literals are implied by the regex and keep the xmllint
+    # staging off generic "error" lines
+    pre = _has(".xml:", ".xsd:", ".xsl:", ".svg:", ".html:") & _has("error", "warning")
+    staged = _stage(lines, "_g_xml", _XMLLINT, 4, pre)
+    g = lambda i: _g("_g_xml", i)  # noqa: E731
+    sev = F.when(g(3) == "warning", F.lit("warning")).otherwise(F.lit("error"))
+    ev = _ev(
+        "xmllint", "lint", sev, g(4), file=g(1), line=g(2),
+        code=F.replace(g(3), F.lit(" "), F.lit("_")),
+    )
+    return staged, [(pre & _line().rlike(_XMLLINT), ev)]
 
 
 # multi-rule stateless formats (two/three disjoint per-line rules)
@@ -2257,8 +1907,6 @@ def _f_rustc(lines: DataFrame) -> DataFrame:
     return agg.filter(F.col("err").isNotNull()).select("source_id", ev.alias("ev"))
 
 
-
-
 # --- round-7 batch 6a: carry / consume-pair / lead shapes ---------------------
 # The consume-pair shapes (a setter row consumed by the next qualifying
 # row, state cleared on emit) all use the python_traceback equivalence:
@@ -2765,8 +2413,6 @@ def _r_junit_xml(lines: DataFrame):
         end_line_no=F.col("line_no"),
     )
     return staged, [(emit, ev)]
-
-
 
 
 # --- round-7 batch 6b: the remaining block/segment builders -------------------
@@ -3755,13 +3401,15 @@ def _r_gitleaks(lines: DataFrame):
     return staged, [(emits, full_ev), (partial, partial_ev)]
 
 
-
+# Key order mirrors logparse.FORMATS' role: the auto path breaks
+# diagnose ties by registry position, and the census registers its
+# atoms in this order.
 FAST_FORMATS: dict[str, object] = {
-    "gcc": _r_gcc,
-    "mypy": _r_mypy,
-    "tsc": _r_tsc,
-    "maven": _r_maven,
-    "golangci_lint": _r_golangci,
+    "gcc": _ROW_RULE["gcc"],
+    "mypy": _ROW_RULE["mypy"],
+    "tsc": _ROW_RULE["tsc"],
+    "maven": _ROW_RULE["maven"],
+    "golangci_lint": _ROW_RULE["golangci_lint"],
     "generic": _r_generic,
     "pytest": _r_pytest,
     "eslint": _r_eslint,
@@ -3770,28 +3418,28 @@ FAST_FORMATS: dict[str, object] = {
     "npm": _r_npm,
     "rustc": _f_rustc,
     # round-6 batch 2: the single-line python linters
-    "ruff": _r_ruff,
+    "ruff": _ROW_RULE["ruff"],
     "flake8": _r_flake8,
     "pylint": _r_pylint,
     # round 7: the next seven shapes — single-line (clang-tidy, swiftc,
     # rubocop, go build's lookahead grammar), two-level carry (yamllint,
     # shellcheck), and the javac continuation span (DF-level builder)
-    "clang_tidy": _r_clang_tidy,
-    "swiftc": _r_swiftc,
-    "rubocop": _r_rubocop,
-    "go_build": _r_go_build,
+    "clang_tidy": _ROW_RULE["clang_tidy"],
+    "swiftc": _ROW_RULE["swiftc"],
+    "rubocop": _ROW_RULE["rubocop"],
+    "go_build": _ROW_RULE["go_build"],
     "yamllint": _r_yamllint,
     "shellcheck": _r_shellcheck,
     "javac": _f_javac,
     # round-7 batch 2: the remaining common single-line linters/compilers
     # + two more two-level carry layouts (sqlfluff, stylelint)
-    "checkstyle": _r_checkstyle,
-    "hadolint": _r_hadolint,
+    "checkstyle": _ROW_RULE["checkstyle"],
+    "hadolint": _ROW_RULE["hadolint"],
     "sqlfluff": _r_sqlfluff,
     "luacheck": _r_luacheck,
-    "cppcheck": _r_cppcheck,
-    "markdownlint": _r_markdownlint,
-    "sbt": _r_sbt,
+    "cppcheck": _ROW_RULE["cppcheck"],
+    "markdownlint": _ROW_RULE["markdownlint"],
+    "sbt": _ROW_RULE["sbt"],
     "stylelint": _r_stylelint,
     # round-7 batch 3: the runtime-traceback family (python as a
     # window-carried per-line rule; node/go/java as DF-level builders)
@@ -3808,9 +3456,45 @@ FAST_FORMATS: dict[str, object] = {
     "googletest": _f_googletest,
     "catch2": _f_catch2,
     "mocha": _f_mocha,
-    # round-7 batch 5: the stateless single-line catalog (36 formats
-    # via the _simple table) + the multi-rule stateless shapes
-    **_batch5_formats(),
+    # round-7 batch 5: the stateless single-line catalog (rule rows
+    # and the hand-written single-line formats) + the multi-rule
+    # stateless shapes
+    "actionlint": _ROW_RULE["actionlint"],
+    "ansible_lint": _ROW_RULE["ansible_lint"],
+    "bazel": _ROW_RULE["bazel"],
+    "biome": _r_biome,
+    "commitlint": _ROW_RULE["commitlint"],
+    "dart_analyze": _ROW_RULE["dart_analyze"],
+    "detekt": _ROW_RULE["detekt"],
+    "dmd": _ROW_RULE["dmd"],
+    "erlang": _r_erlang,
+    "kotlinc": _ROW_RULE["kotlinc"],
+    "ktlint": _ROW_RULE["ktlint"],
+    "meson": _ROW_RULE["meson"],
+    "msbuild": _r_msbuild,
+    "nim": _ROW_RULE["nim"],
+    "nvcc": _ROW_RULE["nvcc"],
+    "pascal": _ROW_RULE["pascal"],
+    "perl": _r_perl,
+    "php_lint": _r_php_lint,
+    "phpstan": _ROW_RULE["phpstan"],
+    "playwright": _r_playwright,
+    "pmd": _ROW_RULE["pmd"],
+    "prettier": _ROW_RULE["prettier"],
+    "protoc": _ROW_RULE["protoc"],
+    "psalm": _ROW_RULE["psalm"],
+    "psscriptanalyzer": _ROW_RULE["psscriptanalyzer"],
+    "puppet": _ROW_RULE["puppet"],
+    "ruby_traceback": _r_ruby_traceback,
+    "scalastyle": _ROW_RULE["scalastyle"],
+    "solhint": _ROW_RULE["solhint"],
+    "sphinx": _ROW_RULE["sphinx"],
+    "spotbugs": _ROW_RULE["spotbugs"],
+    "staticcheck": _ROW_RULE["staticcheck"],
+    "swiftlint": _ROW_RULE["swiftlint"],
+    "verilator": _ROW_RULE["verilator"],
+    "xmllint": _r_xmllint,
+    "zig": _ROW_RULE["zig"],
     "ninja": _r_ninja,
     "xcodebuild": _r_xcodebuild,
     "black_isort": _r_black_isort,
@@ -3896,9 +3580,9 @@ _BUILDER_EVENT_TRIGGERS = {
 
 
 # --- auto-detect candidate prefilters (round 8, VERDICT r7 ask #3) -----------
-# One doc-level prefilter per hand-written format (the _simple table's
-# formats carry theirs as fn.pre_fn), mirroring the pre_* lines inside
-# each rule function: the OR of a format's rule prefilters — evaluated
+# One doc-level prefilter per format. A rule row's is its own rule
+# prefilter (the row's `pre`); a hand-written format's mirrors the pre_*
+# lines inside its rule function: the OR of its rule prefilters — evaluated
 # under _doc_prefilter_mode so _has/_starts hit the whole content
 # column. Soundness contract: a format that produces >=1 event on a
 # document MUST be admitted (every event requires some rule whose
@@ -3908,11 +3592,7 @@ _BUILDER_EVENT_TRIGGERS = {
 # Guarded by tests/test_logparse_auto.py's diagnose-vs-candidate sweep
 # over every fixture and fuzz document.
 _AUTO_PRE: dict[str, object] = {
-    "gcc": lambda: _has("error:", "warning:", "note:"),
-    "mypy": lambda: _has(".py") & _has("error:", "warning:", "note:"),
-    "tsc": lambda: _has("TS") & _has("error", "warning"),
-    "maven": lambda: _starts("[ERROR]", "[WARNING]"),
-    "golangci_lint": lambda: _has(".go:"),
+    **{r.key: partial(_prefilter, r.pre) for r in _ROWS},
     "pytest": lambda: _starts("FAILED", "ERROR") | _starts("E"),
     # every eslint event requires BOTH an issue line (whose regex
     # contains a literal error|warning) AND a carried file-header line
@@ -3928,28 +3608,14 @@ _AUTO_PRE: dict[str, object] = {
     "jest": lambda: _has("FAIL", "PASS"),
     "npm": lambda: _starts("npm "),
     "rustc": lambda: _starts("error", "warning"),  # events need an err head (grp>=1)
-    "ruff": lambda: _has(":"),
     "flake8": lambda: _has(":"),
     "pylint": lambda: _has(":") & _has("("),
-    "clang_tidy": lambda: _has("error:", "warning:", "note:") & _has("["),
-    "swiftc": lambda: _has(".swift:") & _has("error:", "warning:", "note:"),
-    "rubocop": lambda: _has(".rb:"),
-    "go_build": lambda: _has(".go:"),
     "yamllint": lambda: (_has("error", "warning") & _has("("))
     | _has(".yml", ".yaml"),
     "shellcheck": lambda: _starts("In ") | (_has("SC") & _has("^")),
     "javac": lambda: _has(".java:") & _has("error:", "warning:"),
-    "checkstyle": lambda: _starts("[ERROR]", "[WARN]", "[INFO]"),
-    "hadolint": lambda: _has("DL", "SC"),
     "sqlfluff": lambda: _starts("==") | _starts("L:"),
     "luacheck": lambda: _has(".lua:") & _has("("),
-    "cppcheck": lambda: _has("[")
-    & _has(
-        "error:", "warning:", "style:", "performance:", "portability:",
-        "information:",
-    ),
-    "markdownlint": lambda: _has(".md:", ".markdown:") & _has("MD"),
-    "sbt": lambda: _starts("[error]", "[warn]") & _has(".scala:"),
     "stylelint": lambda: _has(".css", ".scss", ".less", ".sass")
     | _has("✖", "x"),
     "python_traceback": lambda: _has('File "')
@@ -3970,6 +3636,15 @@ _AUTO_PRE: dict[str, object] = {
     "googletest": lambda: _has("Failure") | _has("FAILED"),
     "catch2": lambda: _has("FAILED:"),
     "mocha": lambda: _has(")"),
+    "biome": lambda: _has("lint/", "format", "organizeImports"),
+    "erlang": lambda: _has(".erl:"),
+    "msbuild": lambda: _has("error", "warning") & _has("("),
+    "perl": lambda: _has(" at ") & _has(" line "),
+    "php_lint": lambda: _starts("PHP "),
+    "playwright": lambda: _has("›"),
+    "ruby_traceback": lambda: _has(".rb:") & _has("in "),
+    "xmllint": lambda: _has(".xml:", ".xsd:", ".xsl:", ".svg:", ".html:")
+    & _has("error", "warning"),
     "ninja": lambda: _starts("FAILED: ") | _starts("ninja: "),
     "xcodebuild": lambda: _starts("** ") | (_has("'") & _has("failed")),
     "black_isort": lambda: _starts("would reformat ", "error: cannot format ")
@@ -4070,11 +3745,10 @@ def _auto_candidate_exprs(content: Column) -> dict[str, Column]:
     out: dict[str, Column] = {}
     probes = _DOC_PROBE
     with _doc_prefilter_mode(content):
-        for fmt, fn in FAST_FORMATS.items():
+        for fmt in FAST_FORMATS:
             if fmt == "generic":
                 continue
-            pre_fn = getattr(fn, "pre_fn", None) or _AUTO_PRE[fmt]
-            out[fmt] = pre_fn()
+            out[fmt] = _AUTO_PRE[fmt]()
             probe = probes.get(fmt)
             if probe is not None:
                 out[fmt] = out[fmt] & content.rlike(probe)
@@ -4103,11 +3777,10 @@ def _auto_presence_program(content: Column):
     atoms: dict = {}
     preds: dict[str, _PAtom] = {}
     with _doc_prefilter_mode(content, atoms=atoms):
-        for fmt, fn in FAST_FORMATS.items():
+        for fmt in FAST_FORMATS:
             if fmt == "generic":
                 continue
-            pre_fn = getattr(fn, "pre_fn", None) or _AUTO_PRE[fmt]
-            preds[fmt] = pre_fn()
+            preds[fmt] = _AUTO_PRE[fmt]()
     # pack the atom bits into a handful of bigint columns (the agg cost
     # scales with OUTPUT column count, so 196 boolean columns lose to 4
     # packed longs aggregated with bit_or)

@@ -158,6 +158,19 @@ def test_fingerprint_stability_and_normalization():
     assert a == b != c
 
 
+def test_format_catalog_pinned():
+    """`blq formats` output: rule rows state category and description,
+    hand-written parsers have theirs recovered from source. Pinned in
+    full so neither path can drift."""
+    import json
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "data", "format_registry.json")
+    with open(path) as fh:
+        want = json.load(fh)["catalog"]
+    assert [list(t) for t in lp.format_catalog()] == want
+
+
 def test_command_format_matching():
     assert lp.match_command_format("gcc -O2 main.c") == "gcc"
     assert lp.match_command_format("python -m pytest tests/") == "pytest"

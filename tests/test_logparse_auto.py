@@ -123,27 +123,50 @@ def test_auto_fuzz_parity(spark, fmt):
     assert _auto_rows(spark, docs) == _py_auto_rows(docs)
 
 
-def test_staging_column_names_unique_across_formats():
-    """fast_parse_auto_df chains EVERY present per-line format's staging
-    onto one line table, so two formats sharing a _stage column name
-    silently clobber each other's regex groups (fuzz/auto-found: pytest
-    and python_traceback both staged '_g_pytf'). Statically assert each
-    staging name is owned by exactly one rule function."""
-    import inspect
-    import re
+def _registry() -> dict:
+    import json
+    import os
 
-    src = inspect.getsource(lpf)
+    path = os.path.join(os.path.dirname(__file__), "data", "format_registry.json")
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def test_format_registry_order_pinned():
+    """Both engines break diagnose ties by registry position, so the
+    key order of FORMATS and FAST_FORMATS is part of the contract."""
+    reg = _registry()
+    assert list(lp.FORMATS) == reg["formats"]
+    assert list(lpf.FAST_FORMATS) == reg["fast_formats"]
+
+
+def test_census_atom_order_pinned(spark):
+    """The presence census packs its literal atoms into bigint bits in
+    registration order (_auto_presence_program), so the order in which
+    the candidate prefilters register them is pinned as well."""
+    atoms: dict = {}
+    with lpf._doc_prefilter_mode(F.col("content"), atoms=atoms):
+        for fmt in lpf.FAST_FORMATS:
+            if fmt != "generic":
+                lpf._AUTO_PRE[fmt]()
+    assert [list(k) for k in atoms] == _registry()["census_atoms"]
+
+
+def test_staging_column_names_unique_across_formats(spark):
+    """fast_parse_auto_df chains EVERY present per-line format's staging
+    onto one line table, so two formats sharing a staged column name
+    silently clobber each other's regex groups (fuzz/auto-found: pytest
+    and python_traceback both staged '_g_pytf'). Check the names each
+    per-line format's plan actually records — rule-row formats generate
+    theirs — and assert each is owned by exactly one format."""
     owners: dict[str, set[str]] = {}
-    fn = None
-    for line in src.splitlines():
-        m = re.match(r"def (_r_\w+|_f_\w+|_simple)\(", line)
-        if m:
-            fn = m.group(1)
-        for col in re.findall(r'_stage\(\s*\w+,\s*"(_g_\w+)"', line):
-            owners.setdefault(col, set()).add(fn)
-    # _simple generates per-name columns from its `name` arg — exclude
-    owners.pop(None, None)
-    dupes = {c: fns for c, fns in owners.items() if len(fns) > 1 and fns != {"_simple"}}
+    for fmt in lpf.FAST_FORMATS:
+        if fmt in lpf._DF_BUILDERS:
+            continue
+        staging, _rules = lpf._format_plan(fmt, None)
+        for name, _expr in staging:
+            owners.setdefault(name, set()).add(fmt)
+    dupes = {c: fmts for c, fmts in owners.items() if len(fmts) > 1}
     assert not dupes, dupes
 
 

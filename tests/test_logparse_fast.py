@@ -514,11 +514,16 @@ def test_events_fixture_event_id_unique_per_user(spark):
     row_number OVER (ORDER BY event_id) is equally ambiguous). The
     byte-identity argument therefore REQUIRES event_id uniqueness per
     user — assert it on the driver's deterministic events fixture."""
+    import os
+
     import pyspark.sql.functions as F
 
     from blq_cli_spark.sources.tables import table
+    from tests.conftest import SF_CORRECT, SF_SMOKE
 
-    for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+    # sf0.1 is the scale bench.py and the gates run x_parse_suite at
+    sf_bench = os.path.join(os.path.dirname(SF_CORRECT), "sf0.1")
+    for sf_dir in (SF_SMOKE, SF_CORRECT, sf_bench):
         dup = (
             table(spark, sf_dir, "events")
             .groupBy("user_id", "event_id")
