@@ -138,11 +138,7 @@ COMPARABLE_18 = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from blq_cli_spark.gates import queries
-    from blq_cli_spark.session import (
-        get_spark,
-        quiet_rdd_release_warnings,
-        release_local_checkpoints,
-    )
+    from blq_cli_spark.session import checkpoint_scope, get_spark
 
     # console progress bars OFF: their \r-frames flooded the driver's
     # tail capture in round 7 and beheaded the JSON record line
@@ -151,13 +147,6 @@ def main() -> None:
         app_name="blq-bench",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    # Round 11 (VERDICT r10 ask #1): the between-queries block release
-    # logs one WARN line per dropped checkpoint block; that spam filled
-    # the driver's bounded tail in round 10 and pushed every
-    # "# query: time" line out of PERF_r10. Silence that one logger so
-    # the per-query stderr lines and the JSON record both land in the
-    # tail again.
-    quiet_rdd_release_warnings(spark)
     qs = queries()
 
     # warm the JVM + parquet footers with a trivial action (not timed)
@@ -172,8 +161,8 @@ def main() -> None:
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if os.path.isdir(warm_dir):
         for name in HEADLINE:
-            qs[name](spark, warm_dir).count()
-        release_local_checkpoints(spark)
+            with checkpoint_scope(spark):
+                qs[name](spark, warm_dir).count()
 
     calib_before = _cpu_calibration_ms()
     shuffle_calib_before = _shuffle_calibration_s(spark)
@@ -193,21 +182,16 @@ def main() -> None:
     for p in range(repeat):
         t_pass: dict[str, float] = {}
         for name in HEADLINE:
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            n = df.count()
-            t_pass[name] = round(time.perf_counter() - t0, 3)
-            # Outside the timed window: drop the localCheckpoint blocks
-            # the query just left in the block managers (round 10 —
-            # x_lsh_ann read 0.97 s and 4.38 s across two otherwise
-            # identical invocations; accumulated dead blocks from the
-            # checkpoint-bearing queries earlier in the suite drive GC
-            # pauses that land on whichever query runs next). Each
-            # query builds a fresh DataFrame per pass, so no timed work
-            # ever reuses a prior pass's blocks — this isolates
-            # per-query cost, which is the operator contract at scale
-            # (release-after-consume, see release_local_checkpoints).
-            release_local_checkpoints(spark)
+            # The scope frees the blocks the query pinned once its
+            # result is consumed, outside the timed window: dead blocks
+            # from earlier checkpoint-bearing queries drove GC pauses
+            # into whichever query ran next (round 10: x_lsh_ann read
+            # 0.97 s and 4.38 s across two identical invocations).
+            with checkpoint_scope(spark):
+                t0 = time.perf_counter()
+                df = qs[name](spark, sf_dir)
+                n = df.count()
+                t_pass[name] = round(time.perf_counter() - t0, 3)
             if p == 0:
                 print(f"# {name}: {t_pass[name]:.3f}s ({n} rows)", file=sys.stderr)
         passes.append(t_pass)

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 
 from blq_cli_spark import output, services
 from blq_cli_spark.operators import views
+from blq_cli_spark.session import checkpoint_scope
 from blq_cli_spark.sources.store import LogStore
 from blq_cli_spark.sources import store as store_mod
 
@@ -97,7 +98,10 @@ def dispatch(
                 "tools": [t["name"] for t in list_tools(disabled)]}
     fn, _ = _TOOLS[tool_name]
     try:
-        return {"ok": True, "result": fn(store, **(args or {}))}
+        # every tool returns plain, fully consumed values, so the
+        # checkpoint blocks its operators pinned can go with the call
+        with checkpoint_scope(store.spark):
+            return {"ok": True, "result": fn(store, **(args or {}))}
     except TypeError as exc:  # bad/missing params — an agent-facing error
         return {"ok": False, "error": f"bad arguments: {exc}"}
     except ValueError as exc:
@@ -449,26 +453,10 @@ def _severity_timeseries(store: LogStore, limit: int = 200) -> list[dict]:
 
 @tool("maintain", "Periodic maintenance: rollup refresh + orphan sweep + blob GC")
 def _maintain(store: LogStore, orphan_min_age: int = 60) -> dict:
-    # Executor-memory housekeeping for the long-lived serve session:
-    # checkpoint-bearing operators (corpus dedup, semantic dedup, IVF
-    # appends, quality scoring) leave localCheckpoint blocks in the
-    # block managers for the life of the session; every tool result is
-    # fully materialized by dispatch time (collected rows or a parquet
-    # write), so maintain is a safe release point — EXCEPT while a
-    # streaming query is active: an in-flight foreachBatch may hold a
-    # checkpoint whose blocks are its only copy (lineage was cut), so
-    # releasing then would fail the batch. Skipped (-1) in that case.
-    from blq_cli_spark.session import release_local_checkpoints
-
-    spark = store.spark
-    released = (
-        release_local_checkpoints(spark) if not spark.streams.active else -1
-    )
     return {
         "dates_rolled": store.maintain_rollup(),
         "orphans_swept": store.sweep_orphans(max_age_seconds=orphan_min_age),
         "blobs_removed": store.cleanup_orphaned_blobs(),
-        "checkpoint_blocks_released": released,
     }
 
 

@@ -16,6 +16,7 @@ knobs that matter at scale set up-front:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -64,75 +65,71 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def release_local_checkpoints(spark: SparkSession) -> int:
-    """Unpersist every persistent RDD on the session; returns the count.
-
-    Several operators cut lineage / pin a reused intermediate with
-    ``localCheckpoint`` (minhash signatures, banded bucket sizing, the
-    connected-components frontier, the bucketed-SemDeDup skinny
-    assignment, IVF append batches). Those blocks live in the executor
-    block managers until the SESSION dies — Spark has no automatic
-    release for checkpoint blocks whose DataFrame went out of Python
-    scope. A long-lived session (serve mode, a notebook, a bench loop)
-    that calls such operators repeatedly therefore accumulates dead
-    blocks without bound: at 100 TB that is eventual executor eviction
-    churn / OOM; even at bench scale it is measurable cross-query GC
-    pressure.
-
-    Call this at result-consumed boundaries: every DataFrame produced by
-    a checkpoint-bearing operator must be fully materialized (written,
-    collected, counted) before the call — unpersisting truncates the
-    only copy, and a later action on a still-live handle fails with
-    "checkpoint block not found" rather than recomputing (the lineage
-    was cut; there is nothing to recompute from).
-
-    Non-blocking (``unpersist(false)``): the block managers drop the
-    blocks asynchronously; the freed memory is available to the next
-    job's tasks, not necessarily to the very next instruction.
-
-    Classic sessions only: the persistent-RDD census lives on the
-    driver-side JVM gateway, which a Spark Connect client does not
-    have. Under Connect this is a no-op returning 0 (blocks are then
-    owned by the server's session lifecycle) instead of an
-    AttributeError deep in py4j.
-    """
-    sc = getattr(spark, "sparkContext", None)
-    jsc = getattr(sc, "_jsc", None) if sc is not None else None
-    if jsc is None:  # Spark Connect client: no JVM gateway
-        return 0
-    jmap = jsc.getPersistentRDDs()
-    rdds = list(jmap.values())
-    for rdd in rdds:
-        rdd.unpersist(False)
-    return len(rdds)
-
-
-def quiet_rdd_release_warnings(spark: SparkSession) -> bool:
-    """Drop the ``org.apache.spark.rdd`` logger to ERROR; True on success.
-
-    Every ``release_local_checkpoints`` call makes Spark log one
-    ``WARN MapPartitionsRDD: RDD n was locally checkpointed, its
-    lineage has been truncated and cannot be recomputed after
-    unpersisting`` line PER released block. At a correct call site the
-    warning is vacuous by contract (the result was already consumed;
-    nothing will ever ask for a recompute), but the spam is not free:
-    a bounded log-tail capture (the bench driver's) loses the real
-    per-query lines under it (round 10: BENCH_r10's tail was 100%
-    this WARN and PERF_r10 lost its whole per_query table).
-
-    Scoped to the ``org.apache.spark.rdd`` logger only — everything
-    else keeps the session's normal level. Classic sessions only (the
-    log4j2 Configurator lives behind the py4j gateway); returns False
-    under Connect or if the logging backend is not log4j2.
-    """
-    sc = getattr(spark, "sparkContext", None)
-    jvm = getattr(sc, "_jvm", None) if sc is not None else None
-    if jvm is None:
-        return False
+def _jsc(spark):
+    """The session's JavaSparkContext; None without a JVM gateway (a
+    Spark Connect client, whose `sparkContext` raises AttributeError or,
+    on older clients, NotImplementedError; or a stopped context)."""
     try:
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.rdd", jvm.org.apache.logging.log4j.Level.ERROR
-        )
-        return True
-    except Exception:
-        return False
+        return spark.sparkContext._jsc
+    except (AttributeError, NotImplementedError):
+        return None
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids in the session's persistent-RDD census; empty without a JVM
+    gateway. Registration is immediate, even for a lazy
+    `localCheckpoint` or a `cache()`d plan's first materialization."""
+    jsc = _jsc(spark)
+    if jsc is None:
+        return set()
+    return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def unpersist_rdds(spark, ids) -> None:
+    """Drop the blocks of the persistent RDDs `ids`, non-blocking.
+
+    Goes through `SparkContext.unpersistRDD`, the path Spark's own
+    ContextCleaner takes: unlike `JavaRDD.unpersist` it logs no
+    "was locally checkpointed, its lineage has been truncated" WARN per
+    dropped block."""
+    jsc = _jsc(spark)
+    if jsc is None:
+        return
+    sc = jsc.sc()
+    for rdd_id in ids:
+        sc.unpersistRDD(rdd_id, False)
+
+
+@contextmanager
+def checkpoint_scope(spark):
+    """Free, on exit, exactly the persistent RDDs registered inside.
+
+    Several operators pin intermediates with `localCheckpoint` (minhash
+    signatures, banded bucket sizing, the bucketed-SemDeDup assignment,
+    IVF appends, `shared_tables`, the fused parse census). Spark never
+    frees those blocks when the DataFrame leaves Python scope, so a
+    long-lived session (serve, a notebook, a bench loop) would hold
+    them until it dies. Wrap one query — building the DataFrame AND
+    consuming its result — in the scope: blocks registered before
+    entry (a user's `cache()`, an outer scope's checkpoints) are left
+    alone, and the release runs even when the body raises. A lazy
+    `cache()` first materialized inside the scope counts as the
+    scope's own.
+
+    A result must be fully consumed before exit: a locally
+    checkpointed block is the only copy (the lineage was cut), so a
+    later action on a surviving handle fails instead of recomputing.
+
+    No-op without a JVM gateway (Spark Connect: blocks follow the
+    server session), and while a streaming query is active (an
+    in-flight `foreachBatch` may hold a block registered meanwhile).
+    Assumes one query at a time on the session: a concurrent job's
+    blocks registered inside the window would be freed too.
+    """
+    before = persistent_rdd_ids(spark)
+    try:
+        yield
+    finally:
+        fresh = persistent_rdd_ids(spark) - before
+        if fresh and not spark.streams.active:
+            unpersist_rdds(spark, fresh)

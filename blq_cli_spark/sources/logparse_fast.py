@@ -739,7 +739,7 @@ _FLAKE8 = r"^([^\s:][^:]*):(\d+):(\d+):\s*([EWFC]\d{3})\s+(.*)$"
 
 
 def _r_flake8(lines: DataFrame):
-    pre = _has(":")
+    pre = _AUTO_PRE["flake8"]()
     staged = _stage(lines, "_g_f8", _FLAKE8, 5, pre)
     g = lambda i: _g("_g_f8", i)  # noqa: E731
     code = g(4)
@@ -760,7 +760,7 @@ _PYLINT = (
 
 
 def _r_pylint(lines: DataFrame):
-    pre = _has(":") & _has("(")
+    pre = _AUTO_PRE["pylint"]()
     staged = _stage(lines, "_g_pl", _PYLINT, 6, pre)
     g = lambda i: _g("_g_pl", i)  # noqa: E731
     code = g(4)
@@ -862,7 +862,7 @@ _LUACHECK = (
 
 
 def _r_luacheck(lines: DataFrame):
-    pre = _has(".lua:") & _has("(")
+    pre = _AUTO_PRE["luacheck"]()
     staged = _stage(lines, "_g_lc", _LUACHECK, 6, pre)
     g = lambda i: _g("_g_lc", i)  # noqa: E731
     sev = F.when(g(4) == "E", F.lit("error")).otherwise(F.lit("warning"))
@@ -922,7 +922,7 @@ _CTEST = r"^\s*\d+/\d+ Test\s+#\d+: ([^\s.]+)\s*\.+\*+\s*(Failed|Timeout|Excepti
 
 
 def _r_ctest(lines: DataFrame):
-    pre = _has("Test") & _has("*")
+    pre = _AUTO_PRE["ctest"]()
     staged = _stage(lines, "_g_cts", _CTEST, 2, pre)
     g = lambda i: _g("_g_cts", i)  # noqa: E731
     ev = _ev(
@@ -937,7 +937,7 @@ _TAP = r"^not ok (\d+)(?:\s*-\s*(.*?))?(?:\s*#.*)?$"
 
 
 def _r_tap(lines: DataFrame):
-    pre = _starts("not ok ")
+    pre = _AUTO_PRE["tap"]()
     staged = _stage(lines, "_g_tap", _TAP, 2, pre)
     name = _strip(
         F.coalesce(_opt(_g("_g_tap", 2)), F.concat(F.lit("test "), _g("_g_tap", 1)))
@@ -953,7 +953,7 @@ _PYUNIT = r"^(FAIL|ERROR): (\w+) \(([\w.]+)\)$"
 
 
 def _r_python_unittest(lines: DataFrame):
-    pre = _starts("FAIL: ", "ERROR: ")
+    pre = _AUTO_PRE["python_unittest"]()
     staged = _stage(lines, "_g_pu", _PYUNIT, 3, pre)
     g = lambda i: _g("_g_pu", i)  # noqa: E731
     full = F.concat(g(3), F.lit("."), g(2))
@@ -1235,7 +1235,7 @@ _BIOME = (
 
 
 def _r_biome(lines: DataFrame):
-    pre = _has("lint/", "format", "organizeImports")
+    pre = _AUTO_PRE["biome"]()
     staged = _stage(lines, "_g_bio", _BIOME, 5, pre)
     g = lambda i: _g("_g_bio", i)  # noqa: E731
     ev = _ev(
@@ -1249,7 +1249,7 @@ _ERLANG = r"^([^\s:]+\.erl):(\d+)(?::(\d+))?:\s*(?:(Warning):\s*)?(.*)$"
 
 
 def _r_erlang(lines: DataFrame):
-    pre = _has(".erl:")
+    pre = _AUTO_PRE["erlang"]()
     staged = _stage(lines, "_g_erl", _ERLANG, 5, pre)
     g = lambda i: _g("_g_erl", i)  # noqa: E731
     sev = F.when(_opt(g(4)).isNotNull(), F.lit("warning")).otherwise(F.lit("error"))
@@ -1267,7 +1267,7 @@ _MSBUILD = (
 
 
 def _r_msbuild(lines: DataFrame):
-    pre = _has("error", "warning") & _has("(")
+    pre = _AUTO_PRE["msbuild"]()
     staged = _stage(lines, "_g_msb", _MSBUILD, 6, pre)
     g = lambda i: _g("_g_msb", i)  # noqa: E731
     ev = _ev(
@@ -1283,7 +1283,7 @@ _PERL = r"^(.+?) at ([^\s]+\.p[lm]) line (\d+)(?:, near \"([^\"]*)\")?\.?$"
 
 
 def _r_perl(lines: DataFrame):
-    pre = _has(" at ") & _has(" line ")
+    pre = _AUTO_PRE["perl"]()
     staged = _stage(lines, "_g_prl", _PERL, 3, pre)
     g = lambda i: _g("_g_prl", i)  # noqa: E731
     msg = F.lower(g(1))
@@ -1301,7 +1301,7 @@ _PHP_LINT = (
 
 
 def _r_php_lint(lines: DataFrame):
-    pre = _starts("PHP ")
+    pre = _AUTO_PRE["php_lint"]()
     staged = _stage(lines, "_g_php", _PHP_LINT, 4, pre)
     g = lambda i: _g("_g_php", i)  # noqa: E731
     sev = F.when(F.contains(F.lower(g(1)), F.lit("error")), F.lit("error")).otherwise(
@@ -1315,7 +1315,7 @@ _PLAYWRIGHT = r"^\s*\d+\) \[([\w-]+)\] › ([^\s:]+):(\d+):(\d+) › (.+?)\s*$"
 
 
 def _r_playwright(lines: DataFrame):
-    pre = _has("›")
+    pre = _AUTO_PRE["playwright"]()
     staged = _stage(lines, "_g_plw", _PLAYWRIGHT, 5, pre)
     g = lambda i: _g("_g_plw", i)  # noqa: E731
     ev = _ev(
@@ -1330,7 +1330,7 @@ _RUBY_TB = r"^([^\s:]+\.rb):(\d+):in [`\']([^\']+)\'?:?\s*(.*?)\s*(?:\((\w+)\))?
 
 
 def _r_ruby_traceback(lines: DataFrame):
-    pre = _has(".rb:") & _has("in ")
+    pre = _AUTO_PRE["ruby_traceback"]()
     staged = _stage(lines, "_g_rtb", _RUBY_TB, 5, pre)
     g = lambda i: _g("_g_rtb", i)  # noqa: E731
     ev = _ev("ruby", "runtime", F.lit("error"), g(4), file=g(1), line=g(2), code=g(5))
@@ -1347,10 +1347,7 @@ _XMLLINT = (
 
 
 def _r_xmllint(lines: DataFrame):
-    # the file group's extension is always followed by ':', so the
-    # ext-colon literals are implied by the regex and keep the xmllint
-    # staging off generic "error" lines
-    pre = _has(".xml:", ".xsd:", ".xsl:", ".svg:", ".html:") & _has("error", "warning")
+    pre = _AUTO_PRE["xmllint"]()
     staged = _stage(lines, "_g_xml", _XMLLINT, 4, pre)
     g = lambda i: _g("_g_xml", i)  # noqa: E731
     sev = F.when(g(3) == "warning", F.lit("warning")).otherwise(F.lit("error"))
@@ -3581,16 +3578,18 @@ _BUILDER_EVENT_TRIGGERS = {
 
 # --- auto-detect candidate prefilters (round 8, VERDICT r7 ask #3) -----------
 # One doc-level prefilter per format. A rule row's is its own rule
-# prefilter (the row's `pre`); a hand-written format's mirrors the pre_*
-# lines inside its rule function: the OR of its rule prefilters — evaluated
-# under _doc_prefilter_mode so _has/_starts hit the whole content
-# column. Soundness contract: a format that produces >=1 event on a
-# document MUST be admitted (every event requires some rule whose
-# prefilter its line passed), so OR over all of a format's prefilters
-# is sound by construction; checkov/junit_xml keep an AND because one
-# event provably requires all of those line kinds in the document.
-# Guarded by tests/test_logparse_auto.py's diagnose-vs-candidate sweep
-# over every fixture and fuzz document.
+# prefilter (the row's `pre`); a hand-written single-rule builder reads
+# its line prefilter from here, so the two cannot drift; a multi-rule
+# format's mirrors the pre_* lines inside its rule function: the OR of
+# its rule prefilters. Evaluated under _doc_prefilter_mode so
+# _has/_starts hit the whole content column. Soundness contract: a
+# format that produces >=1 event on a document MUST be admitted (every
+# event requires some rule whose prefilter its line passed), so OR over
+# all of a format's prefilters is sound by construction; checkov and
+# junit_xml keep an AND because one event provably requires all of
+# those line kinds in the document. Guarded by
+# tests/test_logparse_auto.py's diagnose-vs-candidate sweep over every
+# fixture and fuzz document.
 _AUTO_PRE: dict[str, object] = {
     **{r.key: partial(_prefilter, r.pre) for r in _ROWS},
     "pytest": lambda: _starts("FAILED", "ERROR") | _starts("E"),
@@ -3643,6 +3642,9 @@ _AUTO_PRE: dict[str, object] = {
     "php_lint": lambda: _starts("PHP "),
     "playwright": lambda: _has("›"),
     "ruby_traceback": lambda: _has(".rb:") & _has("in "),
+    # the file group's extension is always followed by ':', so the
+    # ext-colon literals are implied by the regex and keep the xmllint
+    # staging off generic "error" lines
     "xmllint": lambda: _has(".xml:", ".xsd:", ".xsl:", ".svg:", ".html:")
     & _has("error", "warning"),
     "ninja": lambda: _starts("FAILED: ") | _starts("ninja: "),
@@ -4054,10 +4056,9 @@ def fast_parse_auto_df(
     # content, 4 longs) sit in block-manager storage (memory,
     # disk-spilled) between the census and the parse instead of being
     # re-read from parquet — local spill I/O for a second remote scan,
-    # the strictly better trade on NVMe-backed executors. Blocks are
-    # released at the result-consumed boundary
-    # (session.release_local_checkpoints — bench between queries,
-    # serve maintain).
+    # the strictly better trade on NVMe-backed executors. The
+    # enclosing session.checkpoint_scope (bench, serve, tests) frees
+    # the blocks once the parse result is consumed.
     chk = df.select(
         F.col(id_col), F.col(content_col), *packs
     ).localCheckpoint(eager=False)

@@ -56,8 +56,12 @@ class shared_tables:
     full-width materialization would cost more at scale than the
     repeated pruned reads it saves.
 
-    Blocks follow the session release contract
-    (session.release_local_checkpoints at result-consumed boundaries)."""
+    Entries are keyed by session as well as (sf_dir, name), so a nested
+    context never serves one session's checkpoint to another. The
+    context does not free its blocks: the members' plans read them
+    after it exits, so the enclosing `session.checkpoint_scope` frees
+    them once the result is consumed (a plan-only caller wraps its
+    build in a scope too)."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, names: tuple[str, ...]):
         self.spark, self.sf_dir, self.names = spark, sf_dir, names
@@ -66,7 +70,7 @@ class shared_tables:
         self._prev = getattr(_TL_SHARED, "cache", None)
         cache = dict(self._prev or {})
         for n in self.names:
-            key = (self.sf_dir, n)
+            key = (self.spark, self.sf_dir, n)
             if key not in cache:
                 cache[key] = table(self.spark, self.sf_dir, n).localCheckpoint(
                     eager=True
@@ -91,7 +95,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     engine-independent (matches DuckDB's naive-timestamp view)."""
     cache = getattr(_TL_SHARED, "cache", None)
     if cache is not None:
-        got = cache.get((sf_dir, name))
+        got = cache.get((spark, sf_dir, name))
         if got is not None:
             return got
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -158,9 +158,8 @@ def run_stream_to_memory(
     q.awaitTermination(await_seconds)
     # awaitTermination(t) RETURNS on timeout with the query still
     # running — on a loaded host a slow drain would leak an active
-    # query into the session (observed: a later maintain() call then
-    # refuses its checkpoint release because streams.active is
-    # non-empty). Callers get whatever drained (their assertions/reads
+    # query into the session (observed: every later checkpoint_scope
+    # then skips its release because streams.active is non-empty). Callers get whatever drained (their assertions/reads
     # see a partial table and fail loudly); the query never outlives
     # the call.
     if q.isActive:

@@ -4,6 +4,8 @@ plans/<tag>/<query>_<suffix>.txt (round-10 optimization evidence).
 Usage: python scripts/capture_plans.py <tag> <suffix> [query ...]
 e.g.   python scripts/capture_plans.py r10 before
 """
+import contextlib
+import io
 import os
 import sys
 
@@ -16,7 +18,7 @@ def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     from blq_cli_spark.gates import queries
-    from blq_cli_spark.session import get_spark
+    from blq_cli_spark.session import checkpoint_scope, get_spark
 
     import bench
 
@@ -28,16 +30,14 @@ def main() -> None:
     qs = queries()
     names = [n for n in bench.HEADLINE if not only or n in only]
     for name in names:
-        df = qs[name](spark, SF_DIR)
         # supported-surface capture (ADVICE r10 #3): redirect
         # df.explain('formatted') instead of reaching into
-        # PythonSQLUtils (private, breaks on Connect / version bumps)
-        import contextlib
-        import io
-
+        # PythonSQLUtils (private, breaks on Connect / version bumps).
+        # Building a query checkpoints eagerly (shared_tables); the
+        # scope frees those blocks once the plan is captured.
         buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
+        with checkpoint_scope(spark), contextlib.redirect_stdout(buf):
+            qs[name](spark, SF_DIR).explain("formatted")
         plan = buf.getvalue()
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:

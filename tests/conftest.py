@@ -42,29 +42,29 @@ def spark():
 
 
 @pytest.fixture(scope="module", autouse=True)
-def _release_checkpoints_per_module():
-    """Release dead localCheckpoint blocks at every module boundary.
+def _checkpoint_scope_per_module():
+    """Run each module inside one `checkpoint_scope`.
 
     The suite runs 1200+ tests on ONE session; checkpoint-bearing
-    operators (dedup, similarity, quality, corpus, ann_index) leave
-    their blocks in the block managers until the session dies, so GC
-    pressure grows over the 35-minute run. Module teardown is the safe
-    release point: no fixture outlives its module except the session
-    itself (which holds no checkpointed data), and autouse fixtures
-    tear down after the module's own fixtures. Uses getActiveSession so
-    modules that never touch Spark don't pay a session start.
+    operators (dedup, similarity, quality, corpus, ann_index) would
+    otherwise hold their blocks until the session dies, so GC pressure
+    grows over the run. Module teardown is a safe release point: no
+    fixture outlives its module except the session itself, and autouse
+    fixtures tear down after the module's own fixtures. The session
+    fixture is set up first whenever a module's first test uses it;
+    with no active session (a module that never touches Spark) the
+    scope is a no-op, and no session is started for it.
     """
-    yield
     from pyspark.sql import SparkSession
 
-    s = SparkSession.getActiveSession()
-    if s is not None:
+    from blq_cli_spark.session import checkpoint_scope
+
+    with checkpoint_scope(SparkSession.getActiveSession()):
+        yield
+        s = SparkSession.getActiveSession()
         # every test stops its own queries; one still active here is a
         # leak (e.g. an awaitTermination timeout under load) that would
-        # bleed state-store work into unrelated modules — stop it, then
-        # release is safe
-        for q in s.streams.active:
+        # bleed state-store work into unrelated modules, and would
+        # keep the scope from releasing — stop it first
+        for q in s.streams.active if s is not None else ():
             q.stop()
-        from blq_cli_spark.session import release_local_checkpoints
-
-        release_local_checkpoints(s)

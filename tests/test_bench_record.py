@@ -62,10 +62,11 @@ def test_tail_window_fits_per_query_lines_with_release_enabled():
     """Round 11 (VERDICT r10 ask #1): with the between-queries block
     release enabled, the ONLY things bench emits after warmup are the
     pass-1 per-query stderr lines, the JSON record, and two calib
-    comment lines — the release itself must be silent (bench.py calls
-    quiet_rdd_release_warnings; one WARN per released block buried the
-    whole per-query table in round 10). Assert the silent-path output
-    block fits a driver tail window even at 2x today's suite size."""
+    comment lines — the release itself must be silent (checkpoint_scope
+    frees through SparkContext.unpersistRDD, which logs no per-block
+    WARN; one such WARN per released block buried the whole per-query
+    table in round 10). Assert the silent-path output block fits a
+    driver tail window even at 2x today's suite size."""
     import io
     from contextlib import redirect_stderr, redirect_stdout
 

@@ -107,13 +107,13 @@ def test_dedup_clusters_long_path_converges(spark):
     rows = dedup.dedup_clusters(df, max_iterations=8, small_graph_edges=0).collect()
     assert {r["cluster_id"] for r in rows} == {0}
     assert {r["id"] for r in rows} == set(range(n + 1))
-    # superseded edge generations are released as the loop advances: a
-    # multi-round run must leave at most the FINAL generation's blocks
-    # persisted, not one generation per iteration (the session-lifetime
-    # leak that would sink a 100 TB near-dup pass)
+    # superseded edge generations are freed as the loop advances: a
+    # multi-round run leaves exactly the FINAL generation's checkpoint
+    # registered (for the caller's checkpoint_scope), not one
+    # generation per iteration
     assert (
         len(spark.sparkContext._jsc.getPersistentRDDs())
-        <= persisted_before + 1
+        == persisted_before + 1
     )
 
 

@@ -154,10 +154,12 @@ def test_census_atom_order_pinned(spark):
 
 def test_staging_column_names_unique_across_formats(spark):
     """fast_parse_auto_df chains EVERY present per-line format's staging
-    onto one line table, so two formats sharing a staged column name
-    silently clobber each other's regex groups (fuzz/auto-found: pytest
-    and python_traceback both staged '_g_pytf'). Check the names each
-    per-line format's plan actually records — rule-row formats generate
+    onto one line table, so two formats sharing a column name silently
+    clobber each other (fuzz/auto-found: pytest and python_traceback
+    both staged '_g_pytf'; eslint's and jest's file-header carries were
+    both 'cur_file'). Check every name each per-line format's plan
+    records — staged groups and carries alike, since a builder adds
+    both through the recorder's withColumn; rule-row formats generate
     theirs — and assert each is owned by exactly one format."""
     owners: dict[str, set[str]] = {}
     for fmt in lpf.FAST_FORMATS:

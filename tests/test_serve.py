@@ -228,18 +228,40 @@ def test_config_tool_session_set_reset(store):
         runtime.reset_runtime()
 
 
+def test_dispatch_frees_the_call_checkpoints_not_a_prior_cache(store, monkeypatch):
+    """Each tool call runs in a checkpoint_scope: the blocks it pinned
+    go with the call, a DataFrame cached before it survives."""
+    from blq_cli_spark.session import persistent_rdd_ids
+
+    spark = store.spark
+    user = spark.range(200).cache()
+    before = persistent_rdd_ids(spark)
+    assert user.count() == 200
+    user_ids = persistent_rdd_ids(spark) - before
+    pinned: set[int] = set()
+
+    def _pin(store):
+        held = persistent_rdd_ids(spark)
+        df = spark.range(100).localCheckpoint(eager=True)
+        pinned.update(persistent_rdd_ids(spark) - held)
+        return df.count()
+
+    monkeypatch.setitem(serve._TOOLS, "pin_probe", (_pin, "test-only"))
+    out = serve.dispatch(store, "pin_probe")
+    assert out == {"ok": True, "result": 100}
+    held = persistent_rdd_ids(spark)
+    assert pinned and not pinned & held
+    assert user_ids and user_ids <= held
+    assert user.count() == 200
+    user.unpersist()
+
+
 def test_tool_maintain_and_timeseries(store):
-    # a dangling checkpoint from an earlier "request" — maintain is the
-    # serve session's documented release point for its blocks
-    store.spark.range(100).localCheckpoint(eager=True)
     out = serve.dispatch(store, "maintain")
     assert out["ok"] and set(out["result"]) == {
         "dates_rolled", "orphans_swept", "blobs_removed",
-        "checkpoint_blocks_released",
     }
     assert out["result"]["dates_rolled"] >= 1  # fixture dates are closed
-    assert out["result"]["checkpoint_blocks_released"] >= 1
-    assert len(store.spark.sparkContext._jsc.getPersistentRDDs()) == 0
     ts = serve.dispatch(store, "severity_timeseries")
     assert ts["ok"] and ts["result"]
     row = ts["result"][0]

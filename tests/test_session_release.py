@@ -1,86 +1,141 @@
-"""release_local_checkpoints: the session-lifecycle block release.
+"""checkpoint_scope: the per-query block release.
 
 Checkpoint-bearing operators (minhash signatures, banded bucket sizing,
-the CC frontier, the bucketed-SemDeDup skinny assignment, IVF appends)
-leave localCheckpoint blocks in the executor block managers for the
-LIFE OF THE SESSION — Spark never releases them when the DataFrame
-goes out of Python scope. A long-lived session calling them repeatedly
-accumulates dead blocks without bound (executor eviction churn / OOM at
-scale). release_local_checkpoints is the documented release point:
-call it once every result derived from those operators is materialized.
+the CC frontier, the bucketed-SemDeDup skinny assignment, IVF appends,
+shared_tables) leave localCheckpoint blocks in the executor block
+managers until something frees them — Spark does not when the DataFrame
+goes out of Python scope. A query wrapped in checkpoint_scope frees
+exactly the RDDs registered inside it, and nothing that was there
+before: a user's cache and an outer scope's blocks survive.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from blq_cli_spark.session import (
-    quiet_rdd_release_warnings,
-    release_local_checkpoints,
+    checkpoint_scope,
+    persistent_rdd_ids,
+    unpersist_rdds,
 )
 
 
-def test_release_frees_blocks_and_returns_count(spark):
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    a = spark.range(1000).localCheckpoint(eager=True)
-    b = spark.range(10).withColumn("x", F.lit(1)).localCheckpoint(eager=False)
-    assert b.count() == 10  # materialize the lazy one
-    held = len(spark.sparkContext._jsc.getPersistentRDDs())
-    assert held >= before + 2
+def _pinned(spark, df):
+    """`df` checkpointed eagerly, plus the RDD ids that registered."""
+    before = persistent_rdd_ids(spark)
+    out = df.localCheckpoint(eager=True)
+    return out, persistent_rdd_ids(spark) - before
 
-    n = release_local_checkpoints(spark)
-    assert n == held
-    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
-    # keep the handles alive until after the release so the blocks
-    # could not have been dropped by GC instead of by the call
-    del a, b
+
+def test_scope_frees_only_blocks_created_inside(spark):
+    outside, outside_ids = _pinned(spark, spark.range(1000))
+    with checkpoint_scope(spark):
+        eager, eager_ids = _pinned(spark, spark.range(100))
+        before = persistent_rdd_ids(spark)
+        lazy = spark.range(10).withColumn("x", F.lit(1)).localCheckpoint(
+            eager=False
+        )
+        lazy_ids = persistent_rdd_ids(spark) - before
+        assert lazy.count() == 10  # materialize the lazy one
+        assert eager_ids and lazy_ids
+    held = persistent_rdd_ids(spark)
+    assert not (eager_ids | lazy_ids) & held
+    assert outside_ids <= held
+    assert outside.count() == 1000  # its blocks are still readable
+    unpersist_rdds(spark, outside_ids)
+
+
+def test_user_cache_survives_scope(spark):
+    user = spark.range(500).cache()
+    before = persistent_rdd_ids(spark)
+    assert user.count() == 500
+    user_ids = persistent_rdd_ids(spark) - before
+    assert user_ids
+    with checkpoint_scope(spark):
+        _pinned(spark, spark.range(100))
+    assert user_ids <= persistent_rdd_ids(spark)
+    assert user.is_cached and user.count() == 500
+    user.unpersist()
+
+
+def test_nested_scopes_free_inner_then_outer(spark):
+    with checkpoint_scope(spark):
+        _outer, outer_ids = _pinned(spark, spark.range(100))
+        with checkpoint_scope(spark):
+            _inner, inner_ids = _pinned(spark, spark.range(50))
+        held = persistent_rdd_ids(spark)
+        assert not inner_ids & held
+        assert outer_ids <= held
+    assert not outer_ids & persistent_rdd_ids(spark)
+
+
+def test_scope_releases_when_body_raises(spark):
+    ids: set[int] = set()
+    with pytest.raises(RuntimeError, match="query failed"):
+        with checkpoint_scope(spark):
+            _df, ids = _pinned(spark, spark.range(100))
+            raise RuntimeError("query failed")
+    assert ids and not ids & persistent_rdd_ids(spark)
+
+
+def test_scope_frees_nothing_while_a_stream_is_active(spark):
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop")
+        .trigger(processingTime="1 hour")
+        .start()
+    )
+    try:
+        with checkpoint_scope(spark):
+            _df, ids = _pinned(spark, spark.range(100))
+        assert ids and ids <= persistent_rdd_ids(spark)
+    finally:
+        q.stop()
+    unpersist_rdds(spark, ids)
 
 
 def test_session_fully_usable_after_release(spark):
-    spark.range(100).localCheckpoint(eager=True)
-    release_local_checkpoints(spark)
+    with checkpoint_scope(spark):
+        spark.range(100).localCheckpoint(eager=True)
     # fresh work — including a NEW checkpoint — runs normally
     df = spark.range(50).groupBy((F.col("id") % 5).alias("k")).count()
     assert df.count() == 5
-    again = spark.range(20).localCheckpoint(eager=True)
-    assert again.count() == 20
-    release_local_checkpoints(spark)
+    with checkpoint_scope(spark):
+        again = spark.range(20).localCheckpoint(eager=True)
+        assert again.count() == 20
 
 
 def test_release_is_idempotent_and_safe_on_empty_session(spark):
-    release_local_checkpoints(spark)
-    assert release_local_checkpoints(spark) == 0
+    before = persistent_rdd_ids(spark)
+    with checkpoint_scope(spark):
+        with checkpoint_scope(spark):
+            pass
+    assert persistent_rdd_ids(spark) == before
 
 
 def test_release_is_noop_without_jvm_gateway():
-    """Connect-shaped session (no sparkContext._jsc): no-op, not a py4j
-    AttributeError (VERDICT r10 ask #8 — no _jsc access blows up on the
-    query path)."""
+    """Connect-shaped sessions (no sparkContext._jsc): the scope and
+    both helpers are no-ops, not a py4j AttributeError on the query
+    path. Covers a client without `sparkContext`, one whose
+    `sparkContext` raises something other than AttributeError (as
+    older Connect clients do), a context without `_jsc`, and no
+    session at all."""
 
     class _ConnectishSession:
         pass  # no sparkContext attribute at all, like pyspark.sql.connect
 
+    class _RaisingSession:
+        @property
+        def sparkContext(self):
+            raise NotImplementedError("sparkContext() is not supported")
+
     class _NoGatewayContext:
         sparkContext = object()  # has no _jsc
 
-    assert release_local_checkpoints(_ConnectishSession()) == 0
-    assert release_local_checkpoints(_NoGatewayContext()) == 0
-    assert quiet_rdd_release_warnings(_ConnectishSession()) is False
-    assert quiet_rdd_release_warnings(_NoGatewayContext()) is False
-
-
-def test_quiet_rdd_release_warnings_drops_logger_to_error(spark):
-    """The release WARN spam killer (VERDICT r10 ask #1): after the
-    call, the org.apache.spark.rdd logger sits at ERROR, so the
-    one-WARN-per-released-block flood cannot bury the bench's
-    per-query stderr lines in the driver's bounded tail capture."""
-    assert quiet_rdd_release_warnings(spark) is True
-    jvm = spark.sparkContext._jvm
-    lvl = jvm.org.apache.logging.log4j.LogManager.getLogger(
-        "org.apache.spark.rdd"
-    ).getLevel()
-    assert str(lvl) == "ERROR"
-    # a full checkpoint+release cycle still works with the logger quiet
-    df = spark.range(500).localCheckpoint(eager=True)
-    assert df.count() == 500
-    assert release_local_checkpoints(spark) >= 1
+    for stub in (_ConnectishSession(), _RaisingSession(), _NoGatewayContext(), None):
+        assert persistent_rdd_ids(stub) == set()
+        unpersist_rdds(stub, {1, 2})
+        with pytest.raises(RuntimeError):
+            with checkpoint_scope(stub):
+                raise RuntimeError("body error propagates unchanged")

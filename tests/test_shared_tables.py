@@ -1,6 +1,7 @@
 """`sources.tables.shared_tables` must hand back the previous thread-local
 override on every exit path: when a member build inside the context
-raises, and when contexts nest. The table loader is stubbed, so no
+raises, and when contexts nest; and it must key its entries by session.
+The table loader is stubbed, so no
 Spark job runs; the real `table()` is called only for its cache lookup,
 which returns before it touches the session."""
 
@@ -51,9 +52,30 @@ def test_shared_tables_nested_contexts_unwind_in_order(stub_loader):
             assert _real_table(None, "sf", "events") is outer
             assert _real_table(None, "sf", "documents").name == "documents"
         assert _override() is outer_cache
-        assert set(outer_cache) == {("sf", "events")}
+        assert set(outer_cache) == {(None, "sf", "events")}
         with pytest.raises(RuntimeError):
             with T.shared_tables(None, "sf", ("documents",)):
                 raise RuntimeError("inner member failed")
         assert _override() is outer_cache
     assert _override() is before
+
+
+def test_shared_tables_keyed_by_session(monkeypatch):
+    """A nested context over the same (sf_dir, name) for ANOTHER session
+    materializes that session's own table instead of serving the outer
+    session's checkpoint."""
+    loads = []
+
+    def _load(spark, sf_dir, name):
+        loads.append(spark)
+        return _Frame(name)
+
+    monkeypatch.setattr(T, "table", _load)
+    first, second = object(), object()
+    with T.shared_tables(first, "sf", ("events",)):
+        outer = _real_table(first, "sf", "events")
+        with T.shared_tables(second, "sf", ("events",)):
+            inner = _real_table(second, "sf", "events")
+            assert inner is not outer
+            assert _real_table(first, "sf", "events") is outer
+    assert loads == [first, second]
