@@ -232,29 +232,21 @@ def diff_by_group(events_flat: DataFrame, serial1: int, serial2: int) -> DataFra
 
 def diff_fingerprints(events_flat: DataFrame, serial1: int, serial2: int) -> DataFrame:
     """J8: regression diff by fingerprint set algebra — new (in r2 not r1),
-    fixed (in r1 not r2), unchanged (both) — as anti/semi joins (reference
-    services/query.py:380-412, ci_cmd.py:136-178)."""
-
-    def fps(serial: int) -> DataFrame:
-        return (
-            events_flat.filter(
-                (F.col("run_serial") == serial) & F.col("fingerprint").isNotNull()
-            )
-            .select("fingerprint")
-            .distinct()
+    fixed (in r1 not r2), unchanged (both) (reference services/query.py:
+    380-412, ci_cmd.py:136-178). One filtered scan of the two runs, then
+    one groupBy(fingerprint) with a presence flag per run."""
+    g = (
+        events_flat.filter(
+            F.col("run_serial").isin(serial1, serial2) & F.col("fingerprint").isNotNull()
         )
-
-    r1, r2 = fps(serial1), fps(serial2)
-    new = r2.join(r1, "fingerprint", "left_anti").select(
-        "fingerprint", F.lit("new").alias("change")
+        .groupBy("fingerprint")
+        .agg(
+            F.bool_or(F.col("run_serial") == serial1).alias("in1"),
+            F.bool_or(F.col("run_serial") == serial2).alias("in2"),
+        )
     )
-    fixed = r1.join(r2, "fingerprint", "left_anti").select(
-        "fingerprint", F.lit("fixed").alias("change")
-    )
-    unchanged = r2.join(r1, "fingerprint", "left_semi").select(
-        "fingerprint", F.lit("unchanged").alias("change")
-    )
-    return new.unionByName(fixed).unionByName(unchanged)
+    change = F.when(~F.col("in1"), "new").when(~F.col("in2"), "fixed").otherwise("unchanged")
+    return g.select("fingerprint", change.alias("change"))
 
 
 def similar_events(events_flat: DataFrame, fingerprint: str, n: int = 10) -> DataFrame:

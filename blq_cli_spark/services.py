@@ -14,7 +14,7 @@ import re
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 from blq_cli_spark.operators import views
 from blq_cli_spark.plans.query import LogQuery
@@ -229,6 +229,10 @@ def get_output(
     return line_df
 
 
+_TOP_COLS = ["ref_file", "ref_line", "message", "code", "fingerprint"]
+_COUNTED = ("total_errors", "total_warnings", "baseline_errors")
+
+
 def report_data(
     store: LogStore,
     run_serial: int | None = None,
@@ -240,47 +244,33 @@ def report_data(
     run metadata, error/warning totals, by-file breakdowns, top diagnostics,
     and — with a baseline — new/fixed fingerprint sets.
 
-    Aggregations are distributed (groupBy + TakeOrderedAndProject limits);
-    only the already-limited result rows reach the driver. The baseline
-    comparison is two anti-joins on fingerprint, not a driver set diff."""
-    runs = store.runs_loaded()
-    if run_serial is None:
-        row = runs.agg(F.max("run_serial").alias("m")).collect()[0]
-        if row["m"] is None:
+    Run-scoped: the run rows come from `runs`, not `runs_loaded` (whose
+    per-run counts are never read), and `events` is read once, filtered to
+    the run's and the baseline's errors and warnings. Each event is tagged
+    with every piece it feeds — totals, by-file counts, top rows, and
+    new/fixed from per-fingerprint presence flags instead of anti-joins;
+    one groupBy plus one row_number per tag bounds every piece, and the
+    tagged rows are collected in one action. Only limited rows reach the
+    driver, which splits them by tag in rank order."""
+    runs = store.runs()
+    if run_serial is None:  # the latest run: a top-1, one job, no shuffle
+        latest = runs.select("run_serial").orderBy(F.desc("run_serial")).limit(1).collect()
+        if not latest:
             return {"run_serial": None}
-        run_serial = int(row["m"])
-    run_rows = runs.filter(F.col("run_serial") == run_serial).collect()
-    if not run_rows:
+        run_serial = latest[0]["run_serial"]
+    # tool arguments arrive as JSON, where a serial may be a string
+    run_serial = int(run_serial)
+    baseline_serial = None if baseline_serial is None else int(baseline_serial)
+    serials = [s for s in (run_serial, baseline_serial) if s is not None]
+    run_rows = runs.filter(F.col("run_serial").isin(serials)).collect()
+    current = [r for r in run_rows if r["run_serial"] == run_serial]
+    if not current:
         return {"run_serial": None}
-    run = run_rows[0].asDict()
+    run = current[0].asDict()
 
-    flat = store.events_flat()
-    current = flat.filter(F.col("run_serial") == run_serial)
+    def ids(serial: int | None) -> list[str]:
+        return [r["id"] for r in run_rows if r["run_serial"] == serial]
 
-    def by_file(df: DataFrame) -> list[dict]:
-        return [
-            r.asDict()
-            for r in df.filter(F.col("ref_file").isNotNull())
-            .groupBy("ref_file")
-            .agg(F.count(F.lit(1)).alias("count"))
-            .orderBy(F.desc("count"), "ref_file")
-            .limit(file_limit)
-            .collect()
-        ]
-
-    def top(df: DataFrame) -> list[dict]:
-        return [
-            r.asDict()
-            for r in df.select(
-                "ref_file", "ref_line", "message", "code", "fingerprint"
-            )
-            .orderBy("event_index")
-            .limit(error_limit)
-            .collect()
-        ]
-
-    errors = current.filter(F.col("severity") == "error")
-    warnings = current.filter(F.col("severity") == "warning")
     data = {
         "run_serial": run_serial,
         "source_name": run.get("source_name"),
@@ -288,28 +278,90 @@ def report_data(
         "exit_code": run.get("exit_code"),
         "git_branch": run.get("git_branch"),
         "git_commit": run.get("git_commit"),
-        "total_errors": errors.count(),
-        "total_warnings": warnings.count(),
-        "errors_by_file": by_file(errors),
-        "warnings_by_file": by_file(warnings),
-        "top_errors": top(errors),
-        "top_warnings": top(warnings),
     }
-
+    base_ids = None
     if baseline_serial is not None:
-        base_err = flat.filter(
-            (F.col("run_serial") == baseline_serial) & (F.col("severity") == "error")
-        )
-        fp = lambda df: df.filter(F.col("fingerprint").isNotNull()).select("fingerprint").distinct()  # noqa: E731
-        new = errors.join(fp(base_err), "fingerprint", "left_anti")
-        fixed = base_err.join(fp(errors), "fingerprint", "left_anti")
-        data.update(
-            baseline_serial=baseline_serial,
-            baseline_errors=base_err.count(),
-            new_errors=top(new),
-            fixed_errors=top(fixed),
-        )
+        data["baseline_serial"], base_ids = baseline_serial, ids(baseline_serial)
+    data.update(_report_pieces(store.events(), ids(run_serial), base_ids, error_limit, file_limit))
     return data
+
+
+def _report_pieces(
+    events: DataFrame,
+    run_ids: list[str],
+    base_ids: list[str] | None,
+    error_limit: int,
+    file_limit: int,
+) -> dict:
+    """The bounded pieces of `report_data` from one filtered read of the
+    run's and the baseline's events (an event of a run that is its own
+    baseline is both); `base_ids=None` means no baseline pieces."""
+    cur, base = F.col("invocation_id").isin(run_ids), F.col("invocation_id").isin(base_ids or [])
+    err, warn = F.col("severity") == "error", F.col("severity") == "warning"
+    has_file = F.col("ref_file").isNotNull()
+    sub = events.filter((cur | base) & (err | warn))
+    tags = {
+        "total_errors": cur & err,
+        "total_warnings": cur & warn,
+        "errors_by_file": cur & err & has_file,
+        "warnings_by_file": cur & warn & has_file,
+        "top_errors": cur & err,
+        "top_warnings": cur & warn,
+    }
+    if base_ids is not None:
+        # per-fingerprint presence among each side's errors; a null
+        # fingerprint is never present, so its error is both new and fixed
+        # (each null-fingerprint event is its own window partition)
+        has_fp = F.col("fingerprint").isNotNull()
+        w = Window.partitionBy("fingerprint", F.when(~has_fp, F.col("id")))
+        sub = sub.select(
+            "*",
+            F.bool_or(cur & err & has_fp).over(w).alias("_fp_cur"),
+            F.bool_or(base & err & has_fp).over(w).alias("_fp_base"),
+        )
+        tags.update(
+            baseline_errors=base & err,
+            new_errors=cur & err & ~F.col("_fp_base"),
+            fixed_errors=base & err & ~F.col("_fp_cur"),
+        )
+    # one row per (event, piece it feeds); each piece groups on its own
+    # key: nothing for a total, the file for a by-file count and the whole
+    # event for a listed row, whose count is then 1
+    tagged = sub.select(
+        F.explode(F.array_compact(F.array(*[F.when(c, t) for t, c in tags.items()]))).alias("tag"),
+        "id",
+        "event_index",
+        *_TOP_COLS,
+    )
+    total, by_file = F.col("tag").isin(*_COUNTED), F.col("tag").endswith("_by_file")
+    listed = ~total & ~by_file
+    keys = [F.when(~total, F.col("ref_file")).alias("ref_file")] + [
+        F.when(listed, F.col(c)).alias(c) for c in ("id", "event_index", *_TOP_COLS[1:])
+    ]
+    rank = F.row_number().over(
+        Window.partitionBy("tag").orderBy(F.desc("count"), "event_index", "ref_file")
+    )
+    kept = (
+        tagged.groupBy("tag", *keys)
+        .agg(F.count(F.lit(1)).alias("count"))
+        .withColumn("_rank", rank)
+        # the literal cap lets Spark bound each tag before the window's
+        # exchange (a partial WindowGroupLimit); the CASE cap is per tag
+        .filter(
+            (F.col("_rank") <= max(file_limit, error_limit, 1))
+            & (F.col("_rank") <= F.when(by_file, file_limit).when(listed, error_limit).otherwise(1))
+        )
+        .collect()
+    )
+    out: dict = {t: 0 if t in _COUNTED else [] for t in tags}
+    for r in sorted(kept, key=lambda r: r["_rank"]):
+        if r["tag"] in _COUNTED:
+            out[r["tag"]] = r["count"]
+        elif r["tag"].endswith("_by_file"):
+            out[r["tag"]].append({"ref_file": r["ref_file"], "count": r["count"]})
+        else:
+            out[r["tag"]].append({c: r[c] for c in _TOP_COLS})
+    return out
 
 
 def fingerprint_history(store: LogStore, fingerprint: str, n: int = 20) -> list[dict]:

@@ -177,25 +177,38 @@ def test_carry_column_names_unique_across_per_line_formats():
     jest's file-header carry both named 'cur_file', so chaining both
     silently nulled eslint's ref_file): EVERY withColumn name a
     PER-LINE rule function introduces must be unique across the chained
-    set. DF-builder formats run on their own line table and may reuse
-    names; they are excluded."""
+    set. The chain drivers stage their own columns on the same line
+    table, so they count as one more owner. DF-builder formats run on
+    their own line table and may reuse names; they are excluded."""
+    import ast
     import inspect
-    import re
 
     builder_fns = {f.__name__ for f in lpf._DF_BUILDERS.values()}
-    src = inspect.getsource(lpf)
+    drivers = {lpf.fast_parse_df.__name__, lpf.fast_parse_auto_df.__name__}
     owners: dict[str, set[str]] = {}
-    fn = None
-    for line in src.splitlines():
-        m = re.match(r"def ((?:_r_|_f_)\w+)\(", line)
-        if m:
-            fn = m.group(1)
-        if fn is None or fn in builder_fns:
+    for fn in ast.parse(inspect.getsource(lpf)).body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name in builder_fns:
             continue
-        for col in re.findall(r'withColumn\(\s*"(\w+)"', line):
-            owners.setdefault(col, set()).add(fn)
+        if fn.name in drivers:
+            owner = "chain driver"
+        elif fn.name.startswith(("_r_", "_f_")):
+            owner = fn.name
+        else:
+            continue
+        # every `<df>.withColumn("<const>", ...)` call in the body, nested
+        # helpers included, however the call is wrapped across lines
+        for call in ast.walk(fn):
+            if (
+                isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "withColumn"
+                and call.args
+                and isinstance(call.args[0], ast.Constant)
+                and isinstance(call.args[0].value, str)
+            ):
+                owners.setdefault(call.args[0].value, set()).add(owner)
     dupes = {c: fns for c, fns in owners.items() if len(fns) > 1}
-    assert not dupes, dupes
+    assert owners and not dupes, dupes
 
 
 def test_presence_program_is_superset_of_candidates(spark):
