@@ -303,14 +303,6 @@ def cmd_register(args) -> int:
     return 0
 
 
-def cmd_commands(args) -> int:
-    from blq_cli_spark.sources import store as store_mod
-
-    for name, spec in sorted(store_mod.registered_commands(_store(args)).items()):
-        print(f"{name}: {' '.join(spec['argv'])}" + (f"  [{spec['fmt']}]" if spec.get("fmt") else ""))
-    return 0
-
-
 def cmd_suppress(args) -> int:
     from blq_cli_spark.sources import store as store_mod
 

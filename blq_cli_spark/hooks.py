@@ -328,8 +328,6 @@ def format_pr_comment(
 # POST) + _install_claude_code_hooks :700-830. Scripts adapted to this CLI's
 # verbs (`commands suggest --json`, `record attempt|outcome`) and store dir.
 
-HOOK_MARKER = "# blq-spark-managed-hook"
-
 AGENT_SUGGEST_HOOK = f"""#!/bin/bash
 {HOOK_MARKER}
 # PostToolUse(Bash) hook: suggest the registered-command / MCP route when

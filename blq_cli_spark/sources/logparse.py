@@ -6,13 +6,16 @@ chain src/blq/commands/core.py:2037-2102, diagnosis serve.py:1368-1383):
 per-format regex rule tables, severity/location/code extraction,
 fingerprint computation, log-line spans, and auto-detection by scoring.
 
-Formats come in two kinds. The stateless single-line ones ("one regex,
-one event per matching line") are data: rows of `_ROWS`, each holding
-its pattern, severity, field map and prefilter literals. This module
-compiles a row into the Python matcher FORMATS holds; logparse_fast
-compiles the same row into its Column rule. Formats with state across
-lines, or with a computed field a row cannot state, are hand-written
-parsers here with hand-written twins in logparse_fast.
+Formats come in two kinds. The stateless per-line ones (each line
+matches one of a few regexes and yields at most one event) are data:
+rows of `_ROWS`, each an ordered tuple of rules holding a pattern, a
+severity, a field map of groups and templates, the groups that must be
+non-empty and the prefilter literals. This module compiles a row into
+the Python matcher FORMATS holds; logparse_fast compiles the same row
+into its Column rules and auto-detect prefilter. Formats with state
+across lines, or with a field a row cannot state (a fallback message,
+a case-folded prefix, a rewritten code), are hand-written parsers here
+with hand-written twins in logparse_fast.
 
 Execution model:
 - driver-side `parse_content(text, fmt)` for small/in-memory content (S4)
@@ -30,7 +33,9 @@ from __future__ import annotations
 
 import hashlib
 import re
+import string
 from collections.abc import Iterable, Iterator
+from itertools import compress, count
 from typing import NamedTuple
 
 _SEVERITY_ALIASES = {
@@ -93,44 +98,75 @@ def _event(
     }
 
 
-# --- the rule table: stateless single-line formats as data -------------------
-# Every format whose whole grammar is "one regex, one event per matching
-# line" is one _Row. Two compilers read it: _row_parser below builds the
-# Python matcher that FORMATS holds, and logparse_fast._row_rule builds
-# the staged Column rule (the same pattern with group names stripped,
-# positions from re.compile(pattern).groupindex) and serves `pre` as
-# its prefilter and auto-detect candidate prefilter. Formats that need
-# anything else — state across lines, a computed message, an extra
-# guard, a prefix/contains-based severity — stay hand-written in both
-# modules.
+# --- the rule table: stateless per-line formats as data ---------------------
+# Every format whose whole grammar is "each line matches one of a few
+# regexes, one event per matching line" is one _Row: an ordered tuple of
+# _Rules, where the first rule whose pattern matches a line claims it.
+# Two compilers read a row: _row_parser below builds the Python matcher
+# that FORMATS holds, and logparse_fast._row_rule builds the staged
+# Column rules (each pattern with group names stripped, positions from
+# re.compile(pattern).groupindex) and serves the OR of the rules' `pre`
+# as the auto-detect candidate prefilter. A field is a group name or a
+# template over groups ("FAILED: {target}"); severity is a literal or
+# read from a group, where nested groups and lookaheads inside the
+# pattern express code-prefix rules (flake8's `E(?=9)|F`). Formats that
+# need anything else — state across lines, a search-style pattern, a
+# fallback message, a case-folded prefix, a rewritten code — stay
+# hand-written in both modules.
 
 
 class _Sev(NamedTuple):
     """Severity taken from pattern group `group`: normalized through
     _SEVERITY_ALIASES when `map` is None, else looked up in `map`
-    (exact value) with `default` for every other value."""
+    (exact value) with `default` for every other value, a group that
+    did not participate included."""
 
     group: str
     map: dict[str, str] | None = None
     default: str = "info"
 
 
-class _Row(NamedTuple):
-    key: str  # format name in FORMATS / FAST_FORMATS
+class _Rule(NamedTuple):
     tool: str
     category: str
-    doc: str  # the `blq formats` description
     pattern: str  # named-group `re` pattern, anchored ^...$
     sev: str | _Sev  # a literal severity, or one read from a group
-    fields: dict[str, str]  # _event field -> group; "message" required
+    # _event field -> group name, or a template of literals and
+    # "{group}"s (an unmatched group fills as ""); "message" required
+    fields: dict[str, str]
     # prefilter: AND of clauses, each an OR of literals the pattern
     # requires; a "^" prefix means the line starts with the literal
     pre: tuple[tuple[str, ...], ...]
     event_type: str = "diagnostic"
+    need: tuple[str, ...] = ()  # groups that must match non-empty
+
+
+class _Row(NamedTuple):
+    key: str  # format name in FORMATS / FAST_FORMATS
+    doc: str  # the parser docstring; its first line is the `blq formats` text
+    rules: tuple[_Rule, ...]
+
+
+def _one(key: str, tool: str, category: str, doc: str, *rule, **kw) -> _Row:
+    """A single-rule row, written in the table's column order."""
+    return _Row(key, doc, (_Rule(tool, category, *rule, **kw),))
+
+
+def _template(value: str) -> list[tuple[str, str]] | None:
+    """A field value's (literal, group) parts, or None when the value is
+    a plain group name. Groups are "{name}"s with no spec or conversion,
+    so both compilers read a template the same way."""
+    if value.isidentifier():
+        return None
+    parts = []
+    for lit, group, spec, conv in string.Formatter().parse(value):
+        assert not spec and not conv, value
+        parts.append((lit, group or ""))
+    return parts
 
 
 _ROWS: tuple[_Row, ...] = (
-    _Row(
+    _one(
         "actionlint", "actionlint", "lint",
         "actionlint: `.github/workflows/ci.yml:10:5: msg [rule]`.",
         r"^(?P<file>[^\s:]+\.ya?ml):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -139,7 +175,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".yml:", ".yaml:"), ("[",)),
     ),
-    _Row(
+    _one(
         "ansible_lint", "ansible-lint", "lint",
         "ansible-lint: `playbook.yml:10: name[missing] All tasks should be named`.",
         r"^(?P<file>[^\s:]+\.ya?ml):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
@@ -148,7 +184,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".yml:", ".yaml:"),),
     ),
-    _Row(
+    _one(
         "bazel", "bazel", "build",
         "bazel: `ERROR: /path/BUILD:10:1: msg` build-file diagnostics.",
         r"^(?P<sev>ERROR|WARNING): (?P<file>/[^\s:]+/BUILD(?:\.bazel)?):(?P<line>\d+):(?P<col>\d+):\s*(?P<msg>.*)$",
@@ -157,6 +193,31 @@ _ROWS: tuple[_Row, ...] = (
         (("^ERROR: ", "^WARNING: "), ("BUILD",)),
     ),
     _Row(
+        "black_isort",
+        "black --check / isort --check-only: would-reformat + cannot-format\n"
+        "+ incorrectly-sorted lines.",
+        (
+            _Rule(
+                "black", "format", r"^would reformat (?P<file>.+)$", "warning",
+                {"message": "would reformat", "file": "file"},
+                (("^would reformat ",),),
+            ),
+            _Rule(
+                "black", "format", r"^error: cannot format (?P<file>[^:]+):\s*(?P<msg>.*)$",
+                "error",
+                {"message": "msg", "file": "file"},
+                (("^error: cannot format ",),),
+            ),
+            _Rule(
+                "isort", "format",
+                r"^ERROR: (?P<file>[^\s]+) Imports are incorrectly sorted(?P<rest>.*)$",
+                "warning",
+                {"message": "imports are incorrectly sorted{rest}", "file": "file"},
+                (("^ERROR: ",), ("Imports are incorrectly sorted",)),
+            ),
+        ),
+    ),
+    _one(
         "checkstyle", "checkstyle", "lint",
         "checkstyle: `[ERROR] /path/Foo.java:10:5: msg [RuleName]`.",
         r"^\[(?P<sev>ERROR|WARN|INFO)\]\s+(?P<file>[^\s:]+):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
@@ -165,7 +226,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         (("^[ERROR]", "^[WARN]", "^[INFO]"),),
     ),
-    _Row(
+    _one(
         "clang_tidy", "clang-tidy", "lint",
         "clang-tidy: gcc shape + trailing `[check-name]` rule bracket.",
         r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -174,7 +235,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         (("error:", "warning:", "note:"), ("[",)),
     ),
-    _Row(
+    _one(
         "commitlint", "commitlint", "lint",
         "commitlint: `✖  subject may not be empty [subject-empty]`.",
         r"^\s*[✖x]\s+(?P<msg>.*?)\s+\[(?P<rule>[\w-]+)\]\s*$",
@@ -182,7 +243,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "rule": "rule"},
         (("✖", "x"), ("[",)),
     ),
-    _Row(
+    _one(
         "cppcheck", "cppcheck", "lint",
         "cppcheck: `file.c:10:5: error: msg [errorId]` (modern template).",
         r"^(?P<file>[^\s:][^:]*):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
@@ -192,7 +253,16 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
         (("[",), ("error:", "warning:", "style:", "performance:", "portability:", "information:")),
     ),
-    _Row(
+    _one(
+        "ctest", "ctest", "test",
+        "ctest: `1/3 Test #1: test_math ...***Failed  0.05 sec`.",
+        r"^\s*\d+/\d+ Test\s+#\d+: (?P<test>[^\s.]+)\s*\.+\*+\s*(?P<res>Failed|Timeout|Exception).*$",
+        "error",
+        {"message": "{res}: {test}", "test_name": "test"},
+        (("Test",), ("*",)),
+        event_type="test_result",
+    ),
+    _one(
         "dart_analyze", "dart", "lint",
         "dart analyze: `error • msg • lib/main.dart:10:5 • rule_name`.",
         r"^\s*(?P<sev>error|warning|info) (?:•|-) (?P<msg>.+?) (?:•|-) "
@@ -201,7 +271,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".dart:",),),
     ),
-    _Row(
+    _one(
         "detekt", "detekt", "lint",
         "detekt: `src/App.kt:10:5: msg [MagicNumber]` (no severity keyword).",
         r"^(?P<file>[^\s:]+\.kts?):(?P<line>\d+):(?P<col>\d+): (?P<msg>.*?) \[(?P<rule>[\w.]+)\]$",
@@ -209,7 +279,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".kt",), ("[",)),
     ),
-    _Row(
+    _one(
         "dmd", "dmd", "compile",
         "D (dmd/ldc): `src/app.d(10): Error: undefined identifier foo`.",
         r"^(?P<file>[^\s(]+\.di?)\((?P<line>\d+)(?:,(?P<col>\d+))?\):\s*"
@@ -218,7 +288,28 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         (("Error:", "Warning:", "Deprecation:"), ("(",)),
     ),
-    _Row(
+    _one(
+        "erlang", "erlang", "compile",
+        "erlc: `src/mod.erl:10: function foo/0 undefined` (errors carry no\n"
+        "severity keyword; warnings say `Warning:`).",
+        r"^(?P<file>[^\s:]+\.erl):(?P<line>\d+)(?::(?P<col>\d+))?:\s*(?:(?P<sev>Warning):\s*)?(?P<msg>.*)$",
+        _Sev("sev", {"Warning": "warning"}, "error"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col"},
+        ((".erl:",),),
+        need=("msg",),
+    ),
+    # the nested sev group is "E" only before a 9 (E9xx) or "F": the
+    # codes flake8 reports as errors
+    _one(
+        "flake8", "flake8", "lint",
+        "flake8/pycodestyle: `file.py:10:5: E501 line too long (82 > 79)`.",
+        r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<code>(?:(?P<sev>E(?=9)|F)|[EWC])\d{3})\s+(?P<msg>.*)$",
+        _Sev("sev", {"E": "error", "F": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        ((":",),),
+    ),
+    _one(
         "gcc", "gcc", "compile", "",
         r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
         r"(?P<sev>fatal error|error|warning|note):\s*(?P<msg>.*)$",
@@ -228,7 +319,7 @@ _ROWS: tuple[_Row, ...] = (
     ),
     # no severity keyword (which is why the gcc grammar misses these
     # lines); the negative lookahead keeps gcc-shaped lines out
-    _Row(
+    _one(
         "go_build", "go", "compile",
         "go build / go vet: `./main.go:10:5: undefined: foo` — file:line:col",
         r"^(?P<file>\.?/?[\w./-]+\.go):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>(?!.*\b(?:error|warning)\b:).+)$",
@@ -236,7 +327,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         ((".go:",),),
     ),
-    _Row(
+    _one(
         "golangci_lint", "golangci-lint", "lint",
         "golangci-lint: `main.go:10:2: message (lintername)`.",
         r"^(?P<file>[^\s:][^:]*\.go):(?P<line>\d+):(?:(?P<col>\d+):)?\s*"
@@ -245,7 +336,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".go:",),),
     ),
-    _Row(
+    _one(
         "hadolint", "hadolint", "lint",
         "hadolint: `Dockerfile:3 DL3008 warning: Pin versions in apt get`.",
         r"^(?P<file>[^\s:]+):(?P<line>\d+)\s+(?P<code>DL\d+|SC\d+)\s+"
@@ -254,7 +345,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "code": "code"},
         (("DL", "SC"),),
     ),
-    _Row(
+    _one(
         "kotlinc", "kotlinc", "compile",
         "kotlinc: `e: /path/File.kt: (12, 8): unresolved reference: foo`.",
         r"^(?P<sev>[ew]): (?P<file>[^:]+\.kts?): \((?P<line>\d+), (?P<col>\d+)\): (?P<msg>.*)$",
@@ -262,7 +353,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         (("^e: ", "^w: "),),
     ),
-    _Row(
+    _one(
         "ktlint", "ktlint", "lint",
         "ktlint: `src/App.kt:10:5: msg (standard:rule-name)`.",
         r"^(?P<file>[^\s:][^:]*\.kts?):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -271,7 +362,16 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".kt",), ("(",)),
     ),
-    _Row(
+    _one(
+        "luacheck", "luacheck", "lint",
+        "luacheck: `src/a.lua:10:5: (W211) unused variable 'x'`.",
+        r"^\s*(?P<file>[^\s:]+\.lua):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"\((?P<code>(?P<sev>[WE])\d+)\)\s*(?P<msg>.*)$",
+        _Sev("sev", {"E": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        ((".lua:",), ("(",)),
+    ),
+    _one(
         "markdownlint", "markdownlint", "lint",
         "markdownlint: `README.md:12:81 MD013/line-length Line length ...`.",
         r"^(?P<file>[^\s:][^:]*\.(?:md|markdown)):(?P<line>\d+)(?::(?P<col>\d+))?\s+"
@@ -280,14 +380,14 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code", "rule": "rule"},
         ((".md:", ".markdown:"), ("MD",)),
     ),
-    _Row(
+    _one(
         "maven", "maven", "build", "",
         r"^\[(?P<sev>ERROR|WARNING)\]\s+(?:(?P<file>[^\s\[]+):\[(?P<line>\d+),(?P<col>\d+)\]\s*)?(?P<msg>.+)$",
         _Sev("sev"),
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         (("^[ERROR]", "^[WARNING]"),),
     ),
-    _Row(
+    _one(
         "meson", "meson", "build",
         "meson: `meson.build:10:5: ERROR: msg`.",
         r"^(?P<file>[^\s:]+\.build):(?P<line>\d+):(?P<col>\d+): (?P<sev>ERROR|WARNING): (?P<msg>.*)$",
@@ -295,9 +395,19 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         ((".build:",),),
     ),
+    # tsc shares the shape; its TS-prefixed codes belong to tsc
+    _one(
+        "msbuild", "msbuild", "compile",
+        "msbuild/csc: `Program.cs(12,34): error CS0103: msg [proj.csproj]`.",
+        r"^(?P<file>[^\s(][^(]*)\((?P<line>\d+),(?P<col>\d+)\):\s*"
+        r"(?P<sev>error|warning)\s+(?!TS)(?P<code>[A-Z]{1,3}\d{3,5}):\s*(?P<msg>.*?)(?:\s+\[[^\]]+\])?$",
+        _Sev("sev"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
+        (("error", "warning"), ("(",)),
+    ),
     # mypy only ever reports on .py/.pyi files — the restriction is what
     # disambiguates it from clang-tidy's identically-shaped output
-    _Row(
+    _one(
         "mypy", "mypy", "typecheck", "",
         r"^(?P<file>[^\s:][^:]*\.pyi?):(?P<line>\d+)(?::(?P<col>\d+))?:\s*"
         r"(?P<sev>error|warning|note):\s*(?P<msg>.*?)(?:\s+\[(?P<code>[a-z0-9-]+)\])?$",
@@ -305,7 +415,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
         ((".py",), ("error:", "warning:", "note:")),
     ),
-    _Row(
+    _one(
         "nim", "nim", "compile",
         "nim: `src/main.nim(10, 5) Error: undeclared identifier: 'foo'`.",
         r"^(?P<file>[^\s(]+\.nim)\((?P<line>\d+), (?P<col>\d+)\)\s+"
@@ -314,7 +424,27 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         ((".nim(",),),
     ),
+    # the test name is the target's first word: `name` is optional so a
+    # blank target (`FAILED:  `) reads as no name in both engines
     _Row(
+        "ninja",
+        "ninja: `FAILED: target` blocks + `ninja: error: msg` lines (the\n"
+        "compiler output inside a FAILED block belongs to gcc/clang formats).",
+        (
+            _Rule(
+                "ninja", "build", r"^FAILED: (?=.)(?P<target>\s*(?P<name>\S+)?.*)$", "error",
+                {"message": "FAILED: {target}", "test_name": "name"},
+                (("^FAILED: ",),),
+                event_type="task_result",
+            ),
+            _Rule(
+                "ninja", "build", r"^ninja: (?P<sev>error|warning): (?P<msg>.*)$", _Sev("sev"),
+                {"message": "msg"},
+                (("^ninja: ",),),
+            ),
+        ),
+    ),
+    _one(
         "nvcc", "nvcc", "compile",
         "nvcc: `kernel.cu(15): error: identifier \"x\" is undefined`.",
         r"^(?P<file>[^\s(]+\.(?:cu|cuh|cpp|h))\((?P<line>\d+)\):\s*"
@@ -323,7 +453,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line"},
         (("(",), ("error:", "warning:")),
     ),
-    _Row(
+    _one(
         "pascal", "fpc", "compile",
         "fpc: `main.pas(10,5) Error: Identifier not found \"foo\"`.",
         r"^(?P<file>[^\s(]+\.(?:pas|pp|dpr))\((?P<line>\d+),(?P<col>\d+)\)\s+"
@@ -332,7 +462,15 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         ((".pas(", ".pp(", ".dpr("),),
     ),
-    _Row(
+    _one(
+        "php_lint", "php", "compile",
+        "php -l / runtime log: `PHP Parse error: msg in file.php on line 10`.",
+        r"^PHP (?P<sev>Parse error|Fatal error|Warning|Deprecated):\s*(?P<msg>.*?) in (?P<file>[^\s]+) on line (?P<line>\d+)$",
+        _Sev("sev", {"Parse error": "error", "Fatal error": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "code": "sev"},
+        (("^PHP ",),),
+    ),
+    _one(
         "phpstan", "phpstan", "typecheck",
         "phpstan --error-format=raw: `/src/Foo.php:10:Call to undefined ...`.",
         r"^(?P<file>[^\s:]+\.php):(?P<line>\d+):(?P<msg>.+?)\.?$",
@@ -341,6 +479,49 @@ _ROWS: tuple[_Row, ...] = (
         ((".php:",),),
     ),
     _Row(
+        "pip_resolver",
+        "pip/uv dependency-resolution failures: ERROR: Cannot install /\n"
+        "ResolutionImpossible / `× No solution found when resolving deps` and\n"
+        "per-package conflict detail lines.",
+        (
+            _Rule(
+                "pip", "deps",
+                r"^ERROR: (?P<msg>Cannot install .*|ResolutionImpossible.*|No matching distribution found for (?P<pkg>.+)|"
+                r"pip's dependency resolver does not currently.*)$",
+                "error",
+                {"message": "msg", "code": "pkg"},
+                (("^ERROR: ",),),
+            ),
+            # the msg group requires one of three literal heads, which
+            # keeps this rule off every "error"-bearing compiler line
+            _Rule(
+                "uv", "deps",
+                r"^\s*(?:error|×)[:\s]\s*(?P<msg>(?:No solution found|Failed to resolve|Because ).*)$",
+                "error",
+                {"message": "msg"},
+                (("error", "×"), ("No solution found", "Failed to resolve", "Because ")),
+            ),
+            _Rule(
+                "pip", "deps", r"^\s+(?P<pkg>[\w.-]+) (?P<ver>[\d.]+) depends on (?P<dep>.+)$",
+                "warning",
+                {"message": "{pkg} {ver} depends on {dep}", "code": "pkg"},
+                ((" depends on ",),),
+            ),
+        ),
+    ),
+    _one(
+        "playwright", "playwright", "test",
+        "playwright: `1) [chromium] › a.spec.ts:10:5 › suite › test name`.",
+        r"^\s*\d+\) \[(?P<project>[\w-]+)\] › (?P<file>[^\s:]+):(?P<line>\d+):(?P<col>\d+) › (?P<test>.+?)\s*$",
+        "error",
+        {
+            "message": "failed: {test}", "file": "file", "line": "line", "col": "col",
+            "test_name": "test", "code": "project",
+        },
+        (("›",),),
+        event_type="test_result",
+    ),
+    _one(
         "pmd", "pmd", "lint",
         "pmd text: `/src/Foo.java:10: UnusedLocalVariable: msg`.",
         r"^(?P<file>[^\s:]+\.java):(?P<line>\d+):\s*(?P<rule>\w+):\s*(?P<msg>.*)$",
@@ -348,7 +529,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "rule": "rule"},
         ((".java:",),),
     ),
-    _Row(
+    _one(
         "prettier", "prettier", "format",
         "prettier: `[error] src/a.js: SyntaxError: msg (10:5)`.",
         r"^\[(?P<sev>error|warn)\] (?P<file>[^\s:]+): (?P<code>\w+): (?P<msg>.*?) \((?P<line>\d+):(?P<col>\d+)\)$",
@@ -356,7 +537,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
         (("^[error]", "^[warn]"),),
     ),
-    _Row(
+    _one(
         "protoc", "protoc", "compile",
         "protoc: `api/v1/user.proto:10:5: \"Foo\" is not defined.`",
         r"^(?P<file>[^\s:]+\.proto):(?P<line>\d+):(?P<col>\d+):\s*(?P<msg>.*)$",
@@ -364,7 +545,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         ((".proto:",),),
     ),
-    _Row(
+    _one(
         "psalm", "psalm", "typecheck",
         "psalm: `ERROR: UndefinedVariable - src/a.php:10:5 - Cannot find $x`.",
         r"^(?P<sev>ERROR|INFO): (?P<rule>\w+) - (?P<file>[^\s:]+):(?P<line>\d+):(?P<col>\d+) - (?P<msg>.*)$",
@@ -373,7 +554,7 @@ _ROWS: tuple[_Row, ...] = (
         (("^ERROR: ", "^INFO: "),),
     ),
     # table rows: `PSAvoidUsingCmdletAliases Warning deploy.ps1 10 'gci' is an alias...`
-    _Row(
+    _one(
         "psscriptanalyzer", "psscriptanalyzer", "lint",
         "PSScriptAnalyzer table rows: `PSAvoidUsingCmdletAliases Warning",
         r"^(?P<rule>PS\w+)\s+(?P<sev>Error|Warning|Information)\s+(?P<file>[^\s]+\.psm?1)\s+(?P<line>\d+)\s+(?P<msg>.*)$",
@@ -381,7 +562,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "rule": "rule"},
         (("^PS",),),
     ),
-    _Row(
+    _one(
         "puppet", "puppet", "deploy",
         "puppet: `Error: msg (file: /p/site.pp, line: 10, column: 5)`.",
         r"^(?P<sev>Error|Warning): (?P<msg>.*?) \(file: (?P<file>[^,]+), line: (?P<line>\d+)(?:, column: (?P<col>\d+))?\)$",
@@ -389,7 +570,26 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         (("^Error: ", "^Warning: "), ("(file:",)),
     ),
-    _Row(
+    _one(
+        "pylint", "pylint", "lint",
+        "pylint: `module.py:10:5: C0301: Line too long (105/100) (line-too-long)`.",
+        r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
+        r"(?P<code>(?P<sev>[CRWEF])\d{4}):\s*(?P<msg>.*?)\s*\((?P<rule>[\w-]+)\)$",
+        _Sev("sev", {"E": "error", "F": "error"}, "warning"),
+        {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code", "rule": "rule"},
+        ((":",), ("(",)),
+    ),
+    _one(
+        "python_unittest", "unittest", "test",
+        "python unittest: `FAIL: test_x (tests.test_mod.TestCase)` headers\n"
+        "(the traceback detail belongs to python_traceback).",
+        r"^(?P<kind>FAIL|ERROR): (?P<test>\w+) \((?P<cls>[\w.]+)\)$",
+        "error",
+        {"message": "{kind}: {cls}.{test}", "test_name": "{cls}.{test}"},
+        (("^FAIL: ", "^ERROR: "),),
+        event_type="test_result",
+    ),
+    _one(
         "rubocop", "rubocop", "lint",
         "rubocop: `app.rb:10:5: C: Style/FrozenStringLiteral: msg`.",
         r"^(?P<file>[^\s:][^:]*\.rb):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -398,7 +598,17 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".rb:",),),
     ),
-    _Row(
+    _one(
+        "ruby_traceback", "ruby", "runtime",
+        "ruby runtime: `script.rb:10:in \\`foo': msg (RuntimeError)` — only\n"
+        "the frame carrying a message+class yields an event.",
+        r"^(?P<file>[^\s:]+\.rb):(?P<line>\d+):in [`'](?P<fn>[^']+)'?:?\s*(?P<msg>.*?)\s*(?:\((?P<code>\w+)\))?$",
+        "error",
+        {"message": "msg", "file": "file", "line": "line", "code": "code"},
+        ((".rb:",), ("in ",)),
+        need=("msg", "code"),
+    ),
+    _one(
         "ruff", "ruff", "lint",
         "ruff: `src/a.py:10:5: F401 [*] unused import`.",
         r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -407,7 +617,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code", "rule": "code"},
         ((":",),),
     ),
-    _Row(
+    _one(
         "sbt", "scalac", "compile",
         "sbt/scalac: `[error] /path/Foo.scala:10:5: not found: value x`.",
         r"^\[(?P<sev>error|warn)\]\s+(?P<file>[^\s:]+\.scala):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>.*)$",
@@ -415,7 +625,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         (("^[error]", "^[warn]"), (".scala:",)),
     ),
-    _Row(
+    _one(
         "scalastyle", "scalastyle", "lint",
         "scalastyle: `error file=/p/Foo.scala message=msg line=10 column=5`.",
         r"^(?P<sev>error|warning) file=(?P<file>[^\s]+) message=(?P<msg>.*?)"
@@ -424,7 +634,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         (("^error file=", "^warning file="),),
     ),
-    _Row(
+    _one(
         "solhint", "solhint", "lint",
         "solhint: `contracts/Token.sol:10:5: Error: msg [rule]`.",
         r"^(?P<file>[^\s:]+\.sol):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -433,7 +643,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".sol:",),),
     ),
-    _Row(
+    _one(
         "sphinx", "sphinx", "docs",
         "sphinx-build: `/docs/index.rst:10: WARNING: undefined label: foo`.",
         r"^(?P<file>[^\s:]+\.(?:rst|md|txt|py)):(?P<line>\d+): (?P<sev>WARNING|ERROR|SEVERE): (?P<msg>.*)$",
@@ -441,7 +651,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line"},
         (("WARNING:", "ERROR:", "SEVERE:"),),
     ),
-    _Row(
+    _one(
         "spotbugs", "spotbugs", "lint",
         "spotbugs text: `M D NP: msg  At Foo.java:[line 10]`.",
         r"^[MH]\s+[A-Z]\s+(?P<rule>\w+): (?P<msg>.*?)\s+At (?P<file>[\w./$]+\.java):\[line (?P<line>\d+)\]$",
@@ -451,7 +661,7 @@ _ROWS: tuple[_Row, ...] = (
     ),
     # the trailing check code (SA4006) tells it apart from golangci-lint's
     # `(lintername)`
-    _Row(
+    _one(
         "staticcheck", "staticcheck", "lint",
         "staticcheck: `main.go:10:5: msg (SA4006)` — go file:line:col with a",
         r"^(?P<file>[^\s:]+\.go):(?P<line>\d+):(?P<col>\d+): (?P<msg>.*?) \((?P<code>(?:S|SA|ST|U|QF)\d+)\)$",
@@ -459,7 +669,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
         ((".go:",), ("(",)),
     ),
-    _Row(
+    _one(
         "swiftc", "swiftc", "compile",
         "swiftc: gcc shape keyed on the .swift extension.",
         r"^(?P<file>[^\s:][^:]*\.swift):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -468,7 +678,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col"},
         ((".swift:",), ("error:", "warning:", "note:")),
     ),
-    _Row(
+    _one(
         "swiftlint", "swiftlint", "lint",
         "swiftlint: swiftc shape + trailing `(rule_id)`.",
         r"^(?P<file>[^\s:]+\.swift):(?P<line>\d+):(?P<col>\d+): "
@@ -477,7 +687,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "rule": "rule"},
         ((".swift:",), ("(",)),
     ),
-    _Row(
+    _one(
         "tsc", "tsc", "compile",
         "TypeScript compiler: `src/a.ts(10,5): error TS2304: message`.",
         r"^(?P<file>[^\s(][^(]*)\((?P<line>\d+),(?P<col>\d+)\):\s*"
@@ -486,7 +696,7 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
         (("TS",), ("error", "warning")),
     ),
-    _Row(
+    _one(
         "verilator", "verilator", "compile",
         "verilator: `%Error: top.v:10:5: msg` / `%Warning-WIDTH: ...`.",
         r"^%(?P<sev>Error|Warning)(?:-(?P<code>[A-Z]+))?: (?P<file>[^\s:]+):(?P<line>\d+):(?:(?P<col>\d+):)?\s*(?P<msg>.*)$",
@@ -494,7 +704,31 @@ _ROWS: tuple[_Row, ...] = (
         {"message": "msg", "file": "file", "line": "line", "col": "col", "code": "code"},
         (("^%Error", "^%Warning"),),
     ),
+    # `name` is the test name with "-[] " stripped from both ends: it
+    # runs from the first to the last word character
     _Row(
+        "xcodebuild",
+        "xcodebuild: swiftc-shaped diagnostics are covered by the swiftc\n"
+        "format; this one owns `** BUILD FAILED **` and test-case results.",
+        (
+            _Rule(
+                "xcodebuild", "build", r"^\*\* (?P<what>BUILD|TEST) FAILED \*\*$", "error",
+                {"message": "{what} FAILED"},
+                (("^** ",),),
+                event_type="task_result",
+            ),
+            _Rule(
+                "xcodebuild", "test",
+                r"^(?:Test Case )?'(?P<test>(?!')[-\[\] ]*(?P<name>\w(?:[-\[\]\w ]*\w)?)?[-\[\] ]*)' "
+                r"failed(?: \([\d.]+ seconds\))?\.?$",
+                "error",
+                {"message": "test failed: {test}", "test_name": "{name}"},
+                (("'",), ("failed",)),
+                event_type="test_result",
+            ),
+        ),
+    ),
+    _one(
         "zig", "zig", "compile",
         "zig: `src/main.zig:10:5: error: use of undeclared identifier 'foo'`.",
         r"^(?P<file>[^\s:]+\.zig):(?P<line>\d+):(?P<col>\d+):\s*"
@@ -506,31 +740,57 @@ _ROWS: tuple[_Row, ...] = (
 )
 
 
+def _rule_emitter(rule: _Rule):
+    """One rule's (match, emit): emit(m, i) builds the event of line i
+    from the pattern's match m, or None when a `need` group is empty."""
+    rx = re.compile(rule.pattern)
+    sev = rule.sev
+    fields = []
+    for f, v in rule.fields.items():
+        parts = _template(v)
+        groups = [v] if parts is None else [g for _lit, g in parts if g]
+        assert set(groups) <= set(rx.groupindex), (rule.tool, f, v)
+        fields.append((f, v, parts is not None))
+
+    def emit(m: re.Match, i: int) -> dict | None:
+        if not all(m[g] for g in rule.need):
+            return None
+        if isinstance(sev, str):
+            severity = sev
+        elif sev.map is None:
+            severity = _norm_severity(m[sev.group])
+        else:
+            severity = sev.map.get(m[sev.group], sev.default)
+        kw = {f: v.format_map(m.groupdict("")) if tpl else m[v] for f, v, tpl in fields}
+        for f in ("line", "col"):
+            if f in kw:
+                kw[f] = int(kw[f]) if kw[f] else None
+        return _event(
+            rule.tool, rule.category, severity, kw.pop("message"), i,
+            event_type=rule.event_type, **kw,
+        )
+
+    return rx.match, emit
+
+
 def _row_parser(row: _Row):
-    """Compile one rule row into its Python matcher (lines -> events)."""
-    rx = re.compile(row.pattern)
-    sev = row.sev
-    groups = [(f, g) for f, g in row.fields.items() if f != "message"]
+    """Compile one rule row into its Python matcher (lines -> events):
+    the first rule whose pattern matches a line claims the line. Each
+    rule maps its pattern over all lines, and compress/filter pick out
+    the matched lines, so a line no rule matches costs no bytecode."""
+    rules = [_rule_emitter(r) for r in row.rules]
 
     def parse(lines: list[str]) -> Iterator[dict]:
-        for i, ln in enumerate(lines, 1):
-            m = rx.match(ln)
-            if not m:
-                continue
-            if isinstance(sev, str):
-                severity = sev
-            elif sev.map is None:
-                severity = _norm_severity(m[sev.group])
-            else:
-                severity = sev.map.get(m[sev.group], sev.default)
-            kw = {f: m[g] for f, g in groups}
-            for f in ("line", "col"):
-                if f in kw:
-                    kw[f] = int(kw[f]) if kw[f] else None
-            yield _event(
-                row.tool, row.category, severity, m[row.fields["message"]], i,
-                event_type=row.event_type, **kw,
-            )
+        claimed: dict[int, tuple] = {}
+        for match, emit in rules:
+            ms = list(map(match, lines))
+            for i, m in zip(compress(count(1), ms), filter(None, ms)):
+                claimed.setdefault(i, (emit, m))
+        for i in sorted(claimed):
+            emit, m = claimed[i]
+            ev = emit(m, i)
+            if ev is not None:
+                yield ev
 
     parse.__name__ = f"parse_{row.key}"
     parse.__doc__ = row.doc
@@ -845,30 +1105,6 @@ def parse_terraform(lines: list[str]) -> Iterator[dict]:
         )
 
 
-_MSBUILD_RE = re.compile(
-    r"^(?P<file>[^\s(][^(]*)\((?P<line>\d+),(?P<col>\d+)\):\s*"
-    r"(?P<sev>error|warning)\s+(?P<code>[A-Z]{1,3}\d{3,5}):\s*(?P<msg>.*?)(?:\s+\[[^\]]+\])?$"
-)
-
-
-def parse_msbuild(lines: list[str]) -> Iterator[dict]:
-    """msbuild/csc: `Program.cs(12,34): error CS0103: msg [proj.csproj]`."""
-    for i, ln in enumerate(lines, 1):
-        m = _MSBUILD_RE.match(ln)
-        if m and not m["code"].startswith("TS"):  # tsc shares the shape
-            yield _event(
-                "msbuild",
-                "compile",
-                _norm_severity(m["sev"]),
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                code=m["code"],
-            )
-
-
 _CMAKE_HEAD_RE = re.compile(
     r"^CMake (?P<sev>Error|Warning)(?: \(dev\))? at (?P<file>[^\s:]+):(?P<line>\d+)(?:\s*\((?P<fn>[^)]+)\))?:"
 )
@@ -1029,91 +1265,6 @@ def parse_javac(lines: list[str]) -> Iterator[dict]:
             pending = None
     if pending:
         yield pending
-
-
-_PYLINT_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<code>[CRWEF]\d{4}):\s*(?P<msg>.*?)\s*\((?P<rule>[\w-]+)\)$"
-)
-
-
-def parse_pylint(lines: list[str]) -> Iterator[dict]:
-    """pylint: `module.py:10:5: C0301: Line too long (105/100) (line-too-long)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PYLINT_RE.match(ln)
-        if m:
-            yield _event(
-                "pylint",
-                "lint",
-                "error" if m["code"][0] in "EF" else "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                code=m["code"],
-                rule=m["rule"],
-            )
-
-
-_FLAKE8_RE = re.compile(
-    r"^(?P<file>[^\s:][^:]*):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"(?P<code>[EWFC]\d{3})\s+(?P<msg>.*)$"
-)
-
-
-def parse_flake8(lines: list[str]) -> Iterator[dict]:
-    """flake8/pycodestyle: `file.py:10:5: E501 line too long (82 > 79)`."""
-    for i, ln in enumerate(lines, 1):
-        m = _FLAKE8_RE.match(ln)
-        if m:
-            yield _event(
-                "flake8",
-                "lint",
-                "error" if m["code"].startswith(("E9", "F")) else "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                code=m["code"],
-            )
-
-
-_BLACK_RE = re.compile(
-    r"^(?:would reformat (?P<file1>.+)"
-    r"|error: cannot format (?P<file2>[^:]+):\s*(?P<msg>.*)$)"
-)
-_ISORT_RE = re.compile(
-    r"^ERROR: (?P<file>[^\s]+) Imports are incorrectly sorted(?P<rest>.*)$"
-)
-
-
-def parse_black_isort(lines: list[str]) -> Iterator[dict]:
-    """black --check / isort --check-only: would-reformat + cannot-format
-    + incorrectly-sorted lines."""
-    for i, ln in enumerate(lines, 1):
-        m = _BLACK_RE.match(ln)
-        if m:
-            if m["file1"]:
-                yield _event(
-                    "black", "format", "warning", "would reformat", i, file=m["file1"]
-                )
-            else:
-                yield _event(
-                    "black", "format", "error", m["msg"], i, file=m["file2"]
-                )
-            continue
-        m = _ISORT_RE.match(ln)
-        if m:
-            yield _event(
-                "isort",
-                "format",
-                "warning",
-                "imports are incorrectly sorted" + (m["rest"] or ""),
-                i,
-                file=m["file"],
-            )
 
 
 _CARGO_TEST_FAIL_RE = re.compile(r"^test (?P<test>[\w:]+) \.\.\. FAILED$")
@@ -1395,39 +1546,6 @@ def parse_dotnet_test(lines: list[str]) -> Iterator[dict]:
         yield pending
 
 
-_PIP_ERR_RE = re.compile(
-    r"^ERROR: (?P<msg>Cannot install .*|ResolutionImpossible.*|No matching distribution found for (?P<pkg>.+)|"
-    r"pip's dependency resolver does not currently.*)$"
-)
-_UV_ERR_RE = re.compile(r"^\s*(?:error|×)[:\s]\s*(?P<msg>(?:No solution found|Failed to resolve|Because ).*)$")
-_PIP_CONFLICT_RE = re.compile(r"^\s+(?P<pkg>[\w.-]+) (?P<ver>[\d.]+) depends on (?P<dep>.+)$")
-
-
-def parse_pip_resolver(lines: list[str]) -> Iterator[dict]:
-    """pip/uv dependency-resolution failures: ERROR: Cannot install /
-    ResolutionImpossible / `× No solution found when resolving deps` and
-    per-package conflict detail lines."""
-    for i, ln in enumerate(lines, 1):
-        m = _PIP_ERR_RE.match(ln)
-        if m:
-            yield _event("pip", "deps", "error", m["msg"], i, code=m["pkg"])
-            continue
-        m = _UV_ERR_RE.match(ln)
-        if m:
-            yield _event("uv", "deps", "error", m["msg"], i)
-            continue
-        m = _PIP_CONFLICT_RE.match(ln)
-        if m:
-            yield _event(
-                "pip",
-                "deps",
-                "warning",
-                f"{m['pkg']} {m['ver']} depends on {m['dep']}",
-                i,
-                code=m["pkg"],
-            )
-
-
 _VALGRIND_HEAD_RE = re.compile(
     r"^==\d+==\s+(?P<msg>Invalid (?:read|write) of size \d+|"
     r"Conditional jump or move depends on uninitialised value.*|"
@@ -1501,52 +1619,6 @@ def parse_sqlfluff(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_LUACHECK_RE = re.compile(
-    r"^\s*(?P<file>[^\s:]+\.lua):(?P<line>\d+):(?P<col>\d+):\s*"
-    r"\((?P<sev>[WE])(?P<num>\d+)\)\s*(?P<msg>.*)$"
-)
-
-
-def parse_luacheck(lines: list[str]) -> Iterator[dict]:
-    """luacheck: `src/a.lua:10:5: (W211) unused variable 'x'`."""
-    for i, ln in enumerate(lines, 1):
-        m = _LUACHECK_RE.match(ln)
-        if m:
-            yield _event(
-                "luacheck",
-                "lint",
-                "error" if m["sev"] == "E" else "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                col=int(m["col"]),
-                code=m["sev"] + m["num"],
-            )
-
-
-_PHP_LINT_RE = re.compile(
-    r"^PHP (?P<sev>Parse error|Fatal error|Warning|Deprecated):\s*(?P<msg>.*?) in (?P<file>[^\s]+) on line (?P<line>\d+)$"
-)
-
-
-def parse_php_lint(lines: list[str]) -> Iterator[dict]:
-    """php -l / runtime log: `PHP Parse error: msg in file.php on line 10`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PHP_LINT_RE.match(ln)
-        if m:
-            yield _event(
-                "php",
-                "compile",
-                "error" if "error" in m["sev"].lower() else "warning",
-                m["msg"],
-                i,
-                file=m["file"],
-                line=int(m["line"]),
-                code=m["sev"],
-            )
-
-
 _STYLELINT_FILE_RE = re.compile(r"^(?P<file>[^\s].*\.(?:css|scss|less|sass))$")
 _STYLELINT_ISSUE_RE = re.compile(
     r"^\s+(?P<line>\d+):(?P<col>\d+)\s+(?:✖|x)\s+(?P<msg>.*?)\s{2,}(?P<rule>[\w-]+)$"
@@ -1610,31 +1682,6 @@ def parse_elixir(lines: list[str]) -> Iterator[dict]:
             pending_warn = None
 
 
-_XCODE_FAIL_RE = re.compile(r"^\*\* (?P<what>BUILD|TEST) FAILED \*\*$")
-_XCODE_TEST_RE = re.compile(
-    r"^(?:Test Case )?'(?P<test>[-\[\]\w ]+)' (?P<sev>failed|passed)(?: \([\d.]+ seconds\))?\.?$"
-)
-
-
-def parse_xcodebuild(lines: list[str]) -> Iterator[dict]:
-    """xcodebuild: swiftc-shaped diagnostics are covered by the swiftc
-    format; this one owns `** BUILD FAILED **` and test-case results."""
-    for i, ln in enumerate(lines, 1):
-        m = _XCODE_FAIL_RE.match(ln)
-        if m:
-            yield _event(
-                "xcodebuild", "build", "error", f"{m['what']} FAILED", i,
-                event_type="task_result",
-            )
-            continue
-        m = _XCODE_TEST_RE.match(ln)
-        if m and m["sev"] == "failed":
-            yield _event(
-                "xcodebuild", "test", "error", f"test failed: {m['test']}", i,
-                test_name=m["test"].strip("-[] "), event_type="test_result",
-            )
-
-
 _VITEST_FILE_RE = re.compile(
     r"^\s*[❯✓×x]?\s*(?P<file>[^\s]+\.(?:test|spec)\.[jt]sx?)\s+\(\d+ tests?(?: \| (?P<failed>\d+) failed)?\)"
 )
@@ -1678,7 +1725,7 @@ FORMATS: dict[str, callable] = {
     "go_test": parse_go_test,
     "maven": _ROW_PARSE["maven"],
     "tsc": _ROW_PARSE["tsc"],
-    "msbuild": parse_msbuild,
+    "msbuild": _ROW_PARSE["msbuild"],
     "java_stacktrace": parse_java_stacktrace,
     "golangci_lint": _ROW_PARSE["golangci_lint"],
     "ansible": parse_ansible,
@@ -1693,9 +1740,9 @@ FORMATS: dict[str, callable] = {
     "clang_tidy": _ROW_PARSE["clang_tidy"],
     "javac": parse_javac,
     "kotlinc": _ROW_PARSE["kotlinc"],
-    "pylint": parse_pylint,
-    "flake8": parse_flake8,
-    "black_isort": parse_black_isort,
+    "pylint": _ROW_PARSE["pylint"],
+    "flake8": _ROW_PARSE["flake8"],
+    "black_isort": _ROW_PARSE["black_isort"],
     "cargo_test": parse_cargo_test,
     "phpunit": parse_phpunit,
     "ruby_test": parse_ruby_test,
@@ -1707,7 +1754,7 @@ FORMATS: dict[str, callable] = {
     "markdownlint": _ROW_PARSE["markdownlint"],
     "sbt": _ROW_PARSE["sbt"],
     "dotnet_test": parse_dotnet_test,
-    "pip_resolver": parse_pip_resolver,
+    "pip_resolver": _ROW_PARSE["pip_resolver"],
     "valgrind": parse_valgrind,
     "vitest": parse_vitest,
     "cppcheck": _ROW_PARSE["cppcheck"],
@@ -1717,14 +1764,14 @@ FORMATS: dict[str, callable] = {
     "hadolint": _ROW_PARSE["hadolint"],
     "sqlfluff": parse_sqlfluff,
     "bazel": _ROW_PARSE["bazel"],
-    "luacheck": parse_luacheck,
+    "luacheck": _ROW_PARSE["luacheck"],
     "actionlint": _ROW_PARSE["actionlint"],
     "protoc": _ROW_PARSE["protoc"],
     "zig": _ROW_PARSE["zig"],
-    "php_lint": parse_php_lint,
+    "php_lint": _ROW_PARSE["php_lint"],
     "stylelint": parse_stylelint,
     "elixir": parse_elixir,
-    "xcodebuild": parse_xcodebuild,
+    "xcodebuild": _ROW_PARSE["xcodebuild"],
     "generic": parse_generic,
 }
 
@@ -1801,11 +1848,12 @@ def match_command_format(cmd: str) -> str | None:
 def format_catalog() -> list[tuple[str, str, str]]:
     """(name, category, description) for every registered format, the
     `blq formats` listing (reference duck_hunt_formats() TVF surface,
-    commands/management.py:1033-1113). A rule row states both. For a
-    hand-written parser the category is recovered from its own
+    commands/management.py:1033-1113). The description is the first
+    line of the parser's docstring (a rule row's `doc`; empty when
+    undocumented). A rule row states its category in its first rule;
+    for a hand-written parser it is recovered from its own
     `_event(tool, category, ...)` calls so the catalog can never drift
-    from parser behavior, and the description is the parser's
-    docstring first line (empty when undocumented)."""
+    from parser behavior."""
     import inspect
     from collections import Counter
 
@@ -1813,16 +1861,16 @@ def format_catalog() -> list[tuple[str, str, str]]:
     for name, fn in FORMATS.items():
         row = _ROW_BY_KEY.get(name)
         if row is not None:
-            out.append((name, row.category, row.doc))
-            continue
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            src = ""
-        cats = re.findall(r'_event\(\s*"[^"]+",\s*"([^"]+)"', src) or re.findall(
-            r'_event\(\s*\w+,\s*"([^"]+)"', src
-        )
-        cat = Counter(cats).most_common(1)[0][0] if cats else "other"
+            cat = row.rules[0].category
+        else:
+            try:
+                src = inspect.getsource(fn)
+            except (OSError, TypeError):
+                src = ""
+            cats = re.findall(r'_event\(\s*"[^"]+",\s*"([^"]+)"', src) or re.findall(
+                r'_event\(\s*\w+,\s*"([^"]+)"', src
+            )
+            cat = Counter(cats).most_common(1)[0][0] if cats else "other"
         doc = (fn.__doc__ or "").strip().splitlines()
         out.append((name, cat, doc[0] if doc else ""))
     return sorted(out, key=lambda t: (t[1], t[0]))
@@ -2128,22 +2176,6 @@ def parse_checkov(lines: list[str]) -> Iterator[dict]:
             code = None
 
 
-_CTEST_RE = re.compile(
-    r"^\s*\d+/\d+ Test\s+#\d+: (?P<test>[^\s.]+)\s*\.+\*+\s*(?P<res>Failed|Timeout|Exception).*$"
-)
-
-
-def parse_ctest(lines: list[str]) -> Iterator[dict]:
-    """ctest: `1/3 Test #1: test_math ...***Failed  0.05 sec`."""
-    for i, ln in enumerate(lines, 1):
-        m = _CTEST_RE.match(ln)
-        if m:
-            yield _event(
-                "ctest", "test", "error", f"{m['res']}: {m['test']}", i,
-                test_name=m["test"], event_type="test_result",
-            )
-
-
 _LATEX_ERR_RE = re.compile(r"^! (?P<msg>.*)$")
 _LATEX_LINE_RE = re.compile(r"^l\.(?P<line>\d+)")
 _LATEX_FILE_RE = re.compile(r"\(([^\s()]+\.tex)\b")
@@ -2188,7 +2220,7 @@ FORMATS.update(
         "solhint": _ROW_PARSE["solhint"],
         "deno": parse_deno,
         "checkov": parse_checkov,
-        "ctest": parse_ctest,
+        "ctest": _ROW_PARSE["ctest"],
         "sphinx": _ROW_PARSE["sphinx"],
         "latex": parse_latex,
         "spotbugs": _ROW_PARSE["spotbugs"],
@@ -2255,23 +2287,6 @@ def parse_node_traceback(lines: list[str]) -> Iterator[dict]:
                 pending = None
     if pending:
         yield pending
-
-
-_RUBY_TB_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.rb):(?P<line>\d+):in [`'](?P<fn>[^']+)'?:?\s*(?P<msg>.*?)\s*(?:\((?P<code>\w+)\))?$"
-)
-
-
-def parse_ruby_traceback(lines: list[str]) -> Iterator[dict]:
-    """ruby runtime: `script.rb:10:in \\`foo': msg (RuntimeError)` — only
-    the frame carrying a message+class yields an event."""
-    for i, ln in enumerate(lines, 1):
-        m = _RUBY_TB_RE.match(ln)
-        if m and m["msg"] and m["code"]:
-            yield _event(
-                "ruby", "runtime", "error", m["msg"], i,
-                file=m["file"], line=int(m["line"]), code=m["code"],
-            )
 
 
 _PERL_RE = re.compile(
@@ -2343,49 +2358,11 @@ def parse_clojure(lines: list[str]) -> Iterator[dict]:
             )
 
 
-_ERLANG_RE = re.compile(
-    r"^(?P<file>[^\s:]+\.erl):(?P<line>\d+)(?::(?P<col>\d+))?:\s*(?:(?P<sev>Warning):\s*)?(?P<msg>.*)$"
-)
-
-
-def parse_erlang(lines: list[str]) -> Iterator[dict]:
-    """erlc: `src/mod.erl:10: function foo/0 undefined` (errors carry no
-    severity keyword; warnings say `Warning:`)."""
-    for i, ln in enumerate(lines, 1):
-        m = _ERLANG_RE.match(ln)
-        if m and m["msg"]:
-            yield _event(
-                "erlang", "compile",
-                "warning" if m["sev"] else "error",
-                m["msg"], i,
-                file=m["file"], line=int(m["line"]),
-                col=int(m["col"]) if m["col"] else None,
-            )
-
-
-_PLAYWRIGHT_RE = re.compile(
-    r"^\s*\d+\) \[(?P<project>[\w-]+)\] › (?P<file>[^\s:]+):(?P<line>\d+):(?P<col>\d+) › (?P<test>.+?)\s*$"
-)
-
-
-def parse_playwright(lines: list[str]) -> Iterator[dict]:
-    """playwright: `1) [chromium] › a.spec.ts:10:5 › suite › test name`."""
-    for i, ln in enumerate(lines, 1):
-        m = _PLAYWRIGHT_RE.match(ln)
-        if m:
-            yield _event(
-                "playwright", "test", "error", f"failed: {m['test']}", i,
-                file=m["file"], line=int(m["line"]), col=int(m["col"]),
-                test_name=m["test"], code=m["project"],
-                event_type="test_result",
-            )
-
-
 FORMATS.update(
     {
         "go_build": _ROW_PARSE["go_build"],
         "node_traceback": parse_node_traceback,
-        "ruby_traceback": parse_ruby_traceback,
+        "ruby_traceback": _ROW_PARSE["ruby_traceback"],
         "perl": parse_perl,
         "julia": parse_julia,
         "clojure": parse_clojure,
@@ -2393,8 +2370,8 @@ FORMATS.update(
         "dmd": _ROW_PARSE["dmd"],
         "nim": _ROW_PARSE["nim"],
         "pascal": _ROW_PARSE["pascal"],
-        "erlang": parse_erlang,
-        "playwright": parse_playwright,
+        "erlang": _ROW_PARSE["erlang"],
+        "playwright": _ROW_PARSE["playwright"],
     }
 )
 
@@ -2533,24 +2510,6 @@ def parse_catch2(lines: list[str]) -> Iterator[dict]:
                 pending = None
 
 
-_PYUNIT_FAIL_RE = re.compile(
-    r"^(?P<sev>FAIL|ERROR): (?P<test>\w+) \((?P<cls>[\w.]+)\)$"
-)
-
-
-def parse_python_unittest(lines: list[str]) -> Iterator[dict]:
-    """python unittest: `FAIL: test_x (tests.test_mod.TestCase)` headers
-    (the traceback detail belongs to python_traceback)."""
-    for i, ln in enumerate(lines, 1):
-        m = _PYUNIT_FAIL_RE.match(ln)
-        if m:
-            yield _event(
-                "unittest", "test", "error",
-                f"{m['sev']}: {m['cls']}.{m['test']}", i,
-                test_name=f"{m['cls']}.{m['test']}", event_type="test_result",
-            )
-
-
 _XMLLINT_RE = re.compile(
     r"^(?P<file>[^\s:]+\.(?:xml|xsd|xsl|svg|html)):(?P<line>\d+): "
     r"(?P<kind>parser error|validity error|error|warning)\s*:\s*(?P<msg>.*)$"
@@ -2605,7 +2564,7 @@ FORMATS.update(
         "tap": parse_tap,
         "googletest": parse_googletest,
         "catch2": parse_catch2,
-        "python_unittest": parse_python_unittest,
+        "python_unittest": _ROW_PARSE["python_unittest"],
         "swiftlint": _ROW_PARSE["swiftlint"],
         "detekt": _ROW_PARSE["detekt"],
         "scalastyle": _ROW_PARSE["scalastyle"],
@@ -2634,26 +2593,6 @@ _COMMAND_PATTERNS.extend(
 
 
 # --- batch 8 formats ---------------------------------------------------------
-
-
-_NINJA_FAILED_RE = re.compile(r"^FAILED: (?P<target>.+)$")
-_NINJA_ERR_RE = re.compile(r"^ninja: (?P<sev>error|warning): (?P<msg>.*)$")
-
-
-def parse_ninja(lines: list[str]) -> Iterator[dict]:
-    """ninja: `FAILED: target` blocks + `ninja: error: msg` lines (the
-    compiler output inside a FAILED block belongs to gcc/clang formats)."""
-    for i, ln in enumerate(lines, 1):
-        m = _NINJA_FAILED_RE.match(ln)
-        if m:
-            yield _event(
-                "ninja", "build", "error", f"FAILED: {m['target']}", i,
-                test_name=m["target"].split()[0], event_type="task_result",
-            )
-            continue
-        m = _NINJA_ERR_RE.match(ln)
-        if m:
-            yield _event("ninja", "build", _norm_severity(m["sev"]), m["msg"], i)
 
 
 _R_ERR_RE = re.compile(r"^Error(?: in (?P<call>[^:]+))?\s*:\s*(?P<msg>.*)$")
@@ -2776,7 +2715,7 @@ def parse_nunit(lines: list[str]) -> Iterator[dict]:
 FORMATS.update(
     {
         "meson": _ROW_PARSE["meson"],
-        "ninja": parse_ninja,
+        "ninja": _ROW_PARSE["ninja"],
         "r_script": parse_r_script,
         "psscriptanalyzer": _ROW_PARSE["psscriptanalyzer"],
         "ansible_lint": _ROW_PARSE["ansible_lint"],

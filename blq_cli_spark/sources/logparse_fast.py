@@ -9,12 +9,13 @@ the whole plan stays inside WholeStageCodegen / JVM regex, which is the
 Spark-first answer to the reference's compiled duck_hunt C++ extension
 (consumed at src/blq/query.py:139-229).
 
-Two kinds of format. The stateless single-line formats are rows of
-`logparse._ROWS`: `_row_rule` compiles each row into its staged Column
-rule (and `_prefilter` its prefilter), while `logparse._row_parser`
-compiles the same row into the Python matcher — one definition, two
-execution modes. Every other format has a hand-written builder here,
-twin of its hand-written Python parser.
+Two kinds of format. The stateless per-line formats are rows of
+`logparse._ROWS`: `_row_rule` compiles each row's rules into staged
+Column rules (a rule's condition excludes the lines an earlier rule
+matched) and `_row_pre` its auto-detect prefilter, while
+`logparse._row_parser` compiles the same row into the Python matcher —
+one definition, two execution modes. Every other format has a
+hand-written builder here, twin of its hand-written Python parser.
 
 Semantics contract: row-identical output to `logparse.parse_content`
 for each supported format, including the per-document fallback to the
@@ -43,7 +44,7 @@ from itertools import groupby
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from blq_cli_spark.sources.logparse import _ROWS, _SEVERITY_ALIASES, _Row
+from blq_cli_spark.sources.logparse import _ROWS, _SEVERITY_ALIASES, _Row, _template
 
 # splitlines() approximation: the three common line endings. (Python
 # splitlines also splits on \v/\f/\x85/U+2028...; tool output never
@@ -539,41 +540,89 @@ def _prefilter(pre: tuple[tuple[str, ...], ...]) -> Column:
     return out
 
 
-def _row_rule(row: _Row):
-    """Compile one rule row into its per-line builder: one staging
-    regexp_replace of the row's pattern with group names stripped,
-    group positions from groupindex. Every field but the message reads
-    through _opt: regexp_extract gives '' where `re` gives None for an
-    unmatched optional group, and in the row grammar only the message
-    group can match empty while participating."""
-    rx = re.compile(row.pattern)
-    pattern = re.sub(r"\(\?P<\w+>", "(", row.pattern)
-    name = f"_g_{row.key}"
+def _java_pattern(pattern: str) -> str:
+    """A row pattern for java.util.regex: named groups become plain
+    groups, so group k is the k-th group of `re.compile(pattern)`."""
+    return re.sub(r"\(\?P<\w+>", "(", pattern)
 
-    def g(group: str) -> Column:
-        return _g(name, rx.groupindex[group])
+
+def _row_pre(row: _Row) -> Column:
+    """A row's auto-detect candidate prefilter: the OR of its rules'
+    prefilters, in rule order."""
+    out = None
+    for rule in row.rules:
+        c = _prefilter(rule.pre)
+        out = c if out is None else out | c
+    return out
+
+
+def _row_field(g, v: str, opt: bool) -> Column:
+    """A row field as a Column: group `v` (through _opt when `opt`), or
+    the concat of template v's literals and groups."""
+    parts = _template(v)
+    if parts is None:
+        return _opt(g(v)) if opt else g(v)
+    cols = []
+    for lit, grp in parts:
+        cols += [F.lit(lit)] if lit else []
+        cols += [g(grp)] if grp else []
+    return F.concat(*cols)
+
+
+def _row_sev(g, sev) -> Column:
+    """A rule's severity as a Column (see logparse._Sev)."""
+    if isinstance(sev, str):
+        return F.lit(sev)
+    if sev.map is None:
+        return _sev(g(sev.group))
+    out = None
+    for v, to in sev.map.items():
+        out = (F.when if out is None else out.when)(g(sev.group) == v, F.lit(to))
+    return out.otherwise(F.lit(sev.default))
+
+
+def _row_rule(row: _Row):
+    """Compile one rule row into its per-line builder: per rule, one
+    staging regexp_replace of its pattern with group names stripped,
+    group positions from groupindex. The first rule whose pattern
+    matches a line claims it, so each rule's condition excludes every
+    earlier rule's match. A non-message group field reads through _opt:
+    regexp_extract gives '' where `re` gives None for an unmatched
+    optional group, and in the row grammar only the message group can
+    match empty while participating. A template is the concat of its
+    literals and groups ('' for an unmatched group, as in Python)."""
+    specs = []
+    for k, rule in enumerate(row.rules):
+        rx = re.compile(rule.pattern)
+        name = f"_g_{row.key}" + (f"_{k}" if k else "")
+        specs.append((rule, rx, _java_pattern(rule.pattern), name))
 
     def build(lines: DataFrame):
-        pre = _prefilter(row.pre)
-        staged = _stage(lines, name, pattern, rx.groups, pre)
-        sev = row.sev
-        if isinstance(sev, str):
-            sev_c = F.lit(sev)
-        elif sev.map is None:
-            sev_c = _sev(g(sev.group))
-        else:
-            sev_c = None
-            for value, out in sev.map.items():
-                sev_c = (F.when if sev_c is None else sev_c.when)(
-                    g(sev.group) == value, F.lit(out)
-                )
-            sev_c = sev_c.otherwise(F.lit(sev.default))
-        fields = {f: _opt(g(grp)) for f, grp in row.fields.items() if f != "message"}
-        ev = _ev(
-            row.tool, row.category, sev_c, g(row.fields["message"]),
-            event_type=row.event_type, **fields,
-        )
-        return staged, [(pre & _line().rlike(pattern), ev)]
+        staged, out, earlier = lines, [], []
+        for rule, rx, pattern, name in specs:
+
+            def g(group: str, name=name, ix=rx.groupindex) -> Column:
+                return _g(name, ix[group])
+
+            pre = _prefilter(rule.pre)
+            staged = _stage(staged, name, pattern, rx.groups, pre)
+            fields = {
+                f: _row_field(g, v, opt=True) for f, v in rule.fields.items() if f != "message"
+            }
+            ev = _ev(
+                rule.tool, rule.category, _row_sev(g, rule.sev),
+                _row_field(g, rule.fields["message"], opt=False),
+                event_type=rule.event_type, **fields,
+            )
+            hit = pre & _line().rlike(pattern)
+            cond = hit
+            for h in earlier:
+                cond = cond & ~h
+            for grp in rule.need:
+                cond = cond & _opt(g(grp)).isNotNull()
+            out.append((cond, ev))
+            earlier.append(hit)
+        return staged, out
 
     return build
 
@@ -735,46 +784,6 @@ def _r_npm(lines: DataFrame):
     return staged, [(emit, ev)]
 
 
-_FLAKE8 = r"^([^\s:][^:]*):(\d+):(\d+):\s*([EWFC]\d{3})\s+(.*)$"
-
-
-def _r_flake8(lines: DataFrame):
-    pre = _AUTO_PRE["flake8"]()
-    staged = _stage(lines, "_g_f8", _FLAKE8, 5, pre)
-    g = lambda i: _g("_g_f8", i)  # noqa: E731
-    code = g(4)
-    sev = F.when(
-        code.startswith("E9") | code.startswith("F"), "error"
-    ).otherwise("warning")
-    ev = _ev(
-        "flake8", "lint", sev, g(5),
-        file=g(1), line=g(2), col=g(3),
-        code=code,
-    )
-    return staged, [(pre & _line().rlike(_FLAKE8), ev)]
-
-
-_PYLINT = (
-    r"^([^\s:][^:]*):(\d+):(\d+):\s*([CRWEF]\d{4}):\s*(.*?)\s*\(([\w-]+)\)$"
-)
-
-
-def _r_pylint(lines: DataFrame):
-    pre = _AUTO_PRE["pylint"]()
-    staged = _stage(lines, "_g_pl", _PYLINT, 6, pre)
-    g = lambda i: _g("_g_pl", i)  # noqa: E731
-    code = g(4)
-    sev = F.when(F.substring(code, 1, 1).isin("E", "F"), "error").otherwise(
-        "warning"
-    )
-    ev = _ev(
-        "pylint", "lint", sev, g(5),
-        file=g(1), line=g(2), col=g(3),
-        code=code, rule=g(6),
-    )
-    return staged, [(pre & _line().rlike(_PYLINT), ev)]
-
-
 # --- round-7 formats: the file-header carry shapes ----------------------------
 
 
@@ -856,23 +865,6 @@ def _r_sqlfluff(lines: DataFrame):
     return staged, [(pre_i & _line().rlike(_SQLFLUFF_ISSUE), ev)]
 
 
-_LUACHECK = (
-    r"^\s*([^\s:]+\.lua):(\d+):(\d+):\s*\(([WE])(\d+)\)\s*(.*)$"
-)
-
-
-def _r_luacheck(lines: DataFrame):
-    pre = _AUTO_PRE["luacheck"]()
-    staged = _stage(lines, "_g_lc", _LUACHECK, 6, pre)
-    g = lambda i: _g("_g_lc", i)  # noqa: E731
-    sev = F.when(g(4) == "E", F.lit("error")).otherwise(F.lit("warning"))
-    ev = _ev(
-        "luacheck", "lint", sev, g(6),
-        file=g(1), line=g(2), col=g(3), code=F.concat(g(4), g(5)),
-    )
-    return staged, [(pre & _line().rlike(_LUACHECK), ev)]
-
-
 # --- round-7 batch 4: the test-framework family -------------------------------
 
 _CARGO_FAIL = r"^test ([\w:]+) \.\.\. FAILED$"
@@ -918,21 +910,6 @@ def _r_cargo_test(lines: DataFrame):
     ]
 
 
-_CTEST = r"^\s*\d+/\d+ Test\s+#\d+: ([^\s.]+)\s*\.+\*+\s*(Failed|Timeout|Exception).*$"
-
-
-def _r_ctest(lines: DataFrame):
-    pre = _AUTO_PRE["ctest"]()
-    staged = _stage(lines, "_g_cts", _CTEST, 2, pre)
-    g = lambda i: _g("_g_cts", i)  # noqa: E731
-    ev = _ev(
-        "ctest", "test", F.lit("error"),
-        F.concat(g(2), F.lit(": "), g(1)),
-        test_name=g(1), event_type="test_result",
-    )
-    return staged, [(pre & _line().rlike(_CTEST), ev)]
-
-
 _TAP = r"^not ok (\d+)(?:\s*-\s*(.*?))?(?:\s*#.*)?$"
 
 
@@ -947,22 +924,6 @@ def _r_tap(lines: DataFrame):
         test_name=name, event_type="test_result",
     )
     return staged, [(pre & _line().rlike(_TAP), ev)]
-
-
-_PYUNIT = r"^(FAIL|ERROR): (\w+) \(([\w.]+)\)$"
-
-
-def _r_python_unittest(lines: DataFrame):
-    pre = _AUTO_PRE["python_unittest"]()
-    staged = _stage(lines, "_g_pu", _PYUNIT, 3, pre)
-    g = lambda i: _g("_g_pu", i)  # noqa: E731
-    full = F.concat(g(3), F.lit("."), g(2))
-    ev = _ev(
-        "unittest", "test", F.lit("error"),
-        F.concat(g(1), F.lit(": "), full),
-        test_name=full, event_type="test_result",
-    )
-    return staged, [(pre & _line().rlike(_PYUNIT), ev)]
 
 
 _VITEST_FILE = (
@@ -1224,10 +1185,17 @@ def _f_mocha(lines: DataFrame) -> DataFrame:
 
 
 # --- single-line formats a rule row cannot express ----------------------------
-# One pattern, one event per matching line, like the rule rows of
-# logparse._ROWS — but each needs something a row has no field for: a
-# computed message, an extra guard, a prefix/contains-based severity or
-# a rewritten code. The fixture sweep pins each against its Python twin.
+# Stateless like the rows of logparse._ROWS, but each needs something a
+# row cannot state, so both of its parsers stay hand-written:
+#  - generic (above): a search-style pattern and a case-folded prefilter;
+#  - tap (test-framework family): a fallback message, "test N", when
+#    the optional description is missing;
+#  - docker_build: a fallback message (the stripped line) and a guard
+#    that drops an empty message on a '#'-prefixed line;
+#  - biome: a fallback message (the rule) when the text is empty;
+#  - perl: a case-folded message prefix decides the severity;
+#  - xmllint: a rewritten code (spaces to underscores).
+# The fixture sweep pins each against its Python twin.
 
 _BIOME = (
     r"^([^\s:]+):(\d+):(\d+) (lint/[\w/]+|format|organizeImports)\s+(?:━+\s*)?(.*)$"
@@ -1243,40 +1211,6 @@ def _r_biome(lines: DataFrame):
         file=g(1), line=g(2), col=g(3), rule=g(4),
     )
     return staged, [(pre & _line().rlike(_BIOME), ev)]
-
-
-_ERLANG = r"^([^\s:]+\.erl):(\d+)(?::(\d+))?:\s*(?:(Warning):\s*)?(.*)$"
-
-
-def _r_erlang(lines: DataFrame):
-    pre = _AUTO_PRE["erlang"]()
-    staged = _stage(lines, "_g_erl", _ERLANG, 5, pre)
-    g = lambda i: _g("_g_erl", i)  # noqa: E731
-    sev = F.when(_opt(g(4)).isNotNull(), F.lit("warning")).otherwise(F.lit("error"))
-    ev = _ev(
-        "erlang", "compile", sev, g(5),
-        file=g(1), line=g(2), col=_opt(g(3)),
-    )
-    return staged, [(pre & _line().rlike(_ERLANG) & (g(5) != ""), ev)]
-
-
-_MSBUILD = (
-    r"^([^\s(][^(]*)\((\d+),(\d+)\):\s*(error|warning)\s+"
-    r"([A-Z]{1,3}\d{3,5}):\s*(.*?)(?:\s+\[[^\]]+\])?$"
-)
-
-
-def _r_msbuild(lines: DataFrame):
-    pre = _AUTO_PRE["msbuild"]()
-    staged = _stage(lines, "_g_msb", _MSBUILD, 6, pre)
-    g = lambda i: _g("_g_msb", i)  # noqa: E731
-    ev = _ev(
-        "msbuild", "compile", _sev(g(4)), g(6),
-        file=g(1), line=g(2), col=g(3), code=g(5),
-    )
-    # tsc shares the shape: its TS-prefixed codes belong to tsc
-    cond = pre & _line().rlike(_MSBUILD) & ~g(5).startswith("TS")
-    return staged, [(cond, ev)]
 
 
 _PERL = r"^(.+?) at ([^\s]+\.p[lm]) line (\d+)(?:, near \"([^\"]*)\")?\.?$"
@@ -1295,51 +1229,6 @@ def _r_perl(lines: DataFrame):
     return staged, [(pre & _line().rlike(_PERL), ev)]
 
 
-_PHP_LINT = (
-    r"^PHP (Parse error|Fatal error|Warning|Deprecated):\s*(.*?) in ([^\s]+) on line (\d+)$"
-)
-
-
-def _r_php_lint(lines: DataFrame):
-    pre = _AUTO_PRE["php_lint"]()
-    staged = _stage(lines, "_g_php", _PHP_LINT, 4, pre)
-    g = lambda i: _g("_g_php", i)  # noqa: E731
-    sev = F.when(F.contains(F.lower(g(1)), F.lit("error")), F.lit("error")).otherwise(
-        F.lit("warning")
-    )
-    ev = _ev("php", "compile", sev, g(2), file=g(3), line=g(4), code=g(1))
-    return staged, [(pre & _line().rlike(_PHP_LINT), ev)]
-
-
-_PLAYWRIGHT = r"^\s*\d+\) \[([\w-]+)\] › ([^\s:]+):(\d+):(\d+) › (.+?)\s*$"
-
-
-def _r_playwright(lines: DataFrame):
-    pre = _AUTO_PRE["playwright"]()
-    staged = _stage(lines, "_g_plw", _PLAYWRIGHT, 5, pre)
-    g = lambda i: _g("_g_plw", i)  # noqa: E731
-    ev = _ev(
-        "playwright", "test", F.lit("error"), F.concat(F.lit("failed: "), g(5)),
-        file=g(2), line=g(3), col=g(4),
-        test_name=g(5), code=g(1), event_type="test_result",
-    )
-    return staged, [(pre & _line().rlike(_PLAYWRIGHT), ev)]
-
-
-_RUBY_TB = r"^([^\s:]+\.rb):(\d+):in [`\']([^\']+)\'?:?\s*(.*?)\s*(?:\((\w+)\))?$"
-
-
-def _r_ruby_traceback(lines: DataFrame):
-    pre = _AUTO_PRE["ruby_traceback"]()
-    staged = _stage(lines, "_g_rtb", _RUBY_TB, 5, pre)
-    g = lambda i: _g("_g_rtb", i)  # noqa: E731
-    ev = _ev("ruby", "runtime", F.lit("error"), g(4), file=g(1), line=g(2), code=g(5))
-    cond = pre & _line().rlike(_RUBY_TB) & (
-        _opt(g(4)).isNotNull() & _opt(g(5)).isNotNull()
-    )
-    return staged, [(cond, ev)]
-
-
 _XMLLINT = (
     r"^([^\s:]+\.(?:xml|xsd|xsl|svg|html)):(\d+): "
     r"(parser error|validity error|error|warning)\s*:\s*(.*)$"
@@ -1356,127 +1245,6 @@ def _r_xmllint(lines: DataFrame):
         code=F.replace(g(3), F.lit(" "), F.lit("_")),
     )
     return staged, [(pre & _line().rlike(_XMLLINT), ev)]
-
-
-# multi-rule stateless formats (two/three disjoint per-line rules)
-
-_NINJA_FAILED = r"^FAILED: (.+)$"
-_NINJA_ERR = r"^ninja: (error|warning): (.*)$"
-
-
-def _r_ninja(lines: DataFrame):
-    pre_f = _starts("FAILED: ")
-    pre_e = _starts("ninja: ")
-    staged = _stage(lines, "_g_njf", _NINJA_FAILED, 1, pre_f)
-    staged = _stage(staged, "_g_nje", _NINJA_ERR, 2, pre_e)
-    fail_ev = _ev(
-        "ninja", "build", F.lit("error"),
-        F.concat(F.lit("FAILED: "), _g("_g_njf", 1)),
-        test_name=F.split(_g("_g_njf", 1), r"\s+").getItem(0),
-        event_type="task_result",
-    )
-    err_ev = _ev("ninja", "build", _sev(_g("_g_nje", 1)), _g("_g_nje", 2))
-    return staged, [
-        (pre_f & _line().rlike(_NINJA_FAILED), fail_ev),
-        (pre_e & _line().rlike(_NINJA_ERR), err_ev),
-    ]
-
-
-_XCODE_FAIL = r"^\*\* (BUILD|TEST) FAILED \*\*$"
-_XCODE_TEST = r"^(?:Test Case )?\'([-\[\]\w ]+)\' (failed|passed)(?: \([\d.]+ seconds\))?\.?$"
-
-
-def _r_xcodebuild(lines: DataFrame):
-    pre_f = _starts("** ")
-    pre_t = _has("'") & _has("failed")
-    staged = _stage(lines, "_g_xcf", _XCODE_FAIL, 1, pre_f)
-    staged = _stage(staged, "_g_xct", _XCODE_TEST, 2, pre_t)
-    fail_ev = _ev(
-        "xcodebuild", "build", F.lit("error"),
-        F.concat(_g("_g_xcf", 1), F.lit(" FAILED")),
-        event_type="task_result",
-    )
-    test_ev = _ev(
-        "xcodebuild", "test", F.lit("error"),
-        F.concat(F.lit("test failed: "), _g("_g_xct", 1)),
-        test_name=F.expr("trim(BOTH '-[] ' FROM _g_xct[0])"),
-        event_type="test_result",
-    )
-    return staged, [
-        (pre_f & _line().rlike(_XCODE_FAIL), fail_ev),
-        (pre_t & _line().rlike(_XCODE_TEST) & (_g("_g_xct", 2) == "failed"), test_ev),
-    ]
-
-
-_BLACK = r"^(?:would reformat (.+)|error: cannot format ([^:]+):\s*(.*)$)"
-_ISORT = r"^ERROR: ([^\s]+) Imports are incorrectly sorted(.*)$"
-
-
-def _r_black_isort(lines: DataFrame):
-    pre_b = _starts("would reformat ", "error: cannot format ")
-    pre_i = _starts("ERROR: ") & _has("Imports are incorrectly sorted")
-    staged = _stage(lines, "_g_blk", _BLACK, 3, pre_b)
-    staged = _stage(staged, "_g_iso", _ISORT, 2, pre_i)
-    would_ev = _ev(
-        "black", "format", F.lit("warning"), F.lit("would reformat"),
-        file=_g("_g_blk", 1),
-    )
-    cannot_ev = _ev(
-        "black", "format", F.lit("error"), _g("_g_blk", 3),
-        file=_g("_g_blk", 2),
-    )
-    isort_ev = _ev(
-        "isort", "format", F.lit("warning"),
-        F.concat(F.lit("imports are incorrectly sorted"),
-                 F.coalesce(_g("_g_iso", 2), F.lit(""))),
-        file=_g("_g_iso", 1),
-    )
-    matched_b = pre_b & _line().rlike(_BLACK)
-    return staged, [
-        (matched_b & (_opt(_g("_g_blk", 1)).isNotNull()), would_ev),
-        (matched_b & (_opt(_g("_g_blk", 1)).isNull()), cannot_ev),
-        (pre_i & _line().rlike(_ISORT), isort_ev),
-    ]
-
-
-_PIP_ERR = (
-    r"^ERROR: (Cannot install .*|ResolutionImpossible.*|"
-    r"No matching distribution found for (.+)|"
-    r"pip\'s dependency resolver does not currently.*)$"
-)
-_UV_ERR = r"^\s*(?:error|×)[:\s]\s*((?:No solution found|Failed to resolve|Because ).*)$"
-_PIP_CONFLICT = r"^\s+([\w.-]+) ([\d.]+) depends on (.+)$"
-
-
-def _r_pip_resolver(lines: DataFrame):
-    pre_e = _starts("ERROR: ")
-    # _UV_ERR's capture group requires one of three literal heads, so
-    # the conjunct is implied by the regex — it keeps the uv staging off
-    # every "error"-bearing line of other tools' logs
-    pre_u = _has("error", "×") & _has(
-        "No solution found", "Failed to resolve", "Because "
-    )
-    pre_c = _has(" depends on ")
-    staged = _stage(lines, "_g_pie", _PIP_ERR, 2, pre_e)
-    staged = _stage(staged, "_g_piu", _UV_ERR, 1, pre_u)
-    staged = _stage(staged, "_g_pic", _PIP_CONFLICT, 3, pre_c)
-    pip_ev = _ev(
-        "pip", "deps", F.lit("error"), _g("_g_pie", 1), code=_opt(_g("_g_pie", 2))
-    )
-    uv_ev = _ev("uv", "deps", F.lit("error"), _g("_g_piu", 1))
-    conflict_ev = _ev(
-        "pip", "deps", F.lit("warning"),
-        F.concat(_g("_g_pic", 1), F.lit(" "), _g("_g_pic", 2),
-                 F.lit(" depends on "), _g("_g_pic", 3)),
-        code=_g("_g_pic", 1),
-    )
-    m_e = pre_e & _line().rlike(_PIP_ERR)
-    m_u = pre_u & _line().rlike(_UV_ERR)
-    return staged, [
-        (m_e, pip_ev),
-        (~m_e & m_u, uv_ev),
-        (~m_e & ~m_u & pre_c & _line().rlike(_PIP_CONFLICT), conflict_ev),
-    ]
 
 
 _DOCKER_STEP = r"^(?:Step \d+/\d+|#\d+(?: \d+\.\d+)?)\s+ERROR\b:?\s*(.*)$"
@@ -3416,8 +3184,8 @@ FAST_FORMATS: dict[str, object] = {
     "rustc": _f_rustc,
     # round-6 batch 2: the single-line python linters
     "ruff": _ROW_RULE["ruff"],
-    "flake8": _r_flake8,
-    "pylint": _r_pylint,
+    "flake8": _ROW_RULE["flake8"],
+    "pylint": _ROW_RULE["pylint"],
     # round 7: the next seven shapes — single-line (clang-tidy, swiftc,
     # rubocop, go build's lookahead grammar), two-level carry (yamllint,
     # shellcheck), and the javac continuation span (DF-level builder)
@@ -3433,7 +3201,7 @@ FAST_FORMATS: dict[str, object] = {
     "checkstyle": _ROW_RULE["checkstyle"],
     "hadolint": _ROW_RULE["hadolint"],
     "sqlfluff": _r_sqlfluff,
-    "luacheck": _r_luacheck,
+    "luacheck": _ROW_RULE["luacheck"],
     "cppcheck": _ROW_RULE["cppcheck"],
     "markdownlint": _ROW_RULE["markdownlint"],
     "sbt": _ROW_RULE["sbt"],
@@ -3446,9 +3214,9 @@ FAST_FORMATS: dict[str, object] = {
     "java_stacktrace": _f_java_stacktrace,
     # round-7 batch 4: the test-framework family
     "cargo_test": _r_cargo_test,
-    "ctest": _r_ctest,
+    "ctest": _ROW_RULE["ctest"],
     "tap": _r_tap,
-    "python_unittest": _r_python_unittest,
+    "python_unittest": _ROW_RULE["python_unittest"],
     "vitest": _r_vitest,
     "googletest": _f_googletest,
     "catch2": _f_catch2,
@@ -3464,25 +3232,25 @@ FAST_FORMATS: dict[str, object] = {
     "dart_analyze": _ROW_RULE["dart_analyze"],
     "detekt": _ROW_RULE["detekt"],
     "dmd": _ROW_RULE["dmd"],
-    "erlang": _r_erlang,
+    "erlang": _ROW_RULE["erlang"],
     "kotlinc": _ROW_RULE["kotlinc"],
     "ktlint": _ROW_RULE["ktlint"],
     "meson": _ROW_RULE["meson"],
-    "msbuild": _r_msbuild,
+    "msbuild": _ROW_RULE["msbuild"],
     "nim": _ROW_RULE["nim"],
     "nvcc": _ROW_RULE["nvcc"],
     "pascal": _ROW_RULE["pascal"],
     "perl": _r_perl,
-    "php_lint": _r_php_lint,
+    "php_lint": _ROW_RULE["php_lint"],
     "phpstan": _ROW_RULE["phpstan"],
-    "playwright": _r_playwright,
+    "playwright": _ROW_RULE["playwright"],
     "pmd": _ROW_RULE["pmd"],
     "prettier": _ROW_RULE["prettier"],
     "protoc": _ROW_RULE["protoc"],
     "psalm": _ROW_RULE["psalm"],
     "psscriptanalyzer": _ROW_RULE["psscriptanalyzer"],
     "puppet": _ROW_RULE["puppet"],
-    "ruby_traceback": _r_ruby_traceback,
+    "ruby_traceback": _ROW_RULE["ruby_traceback"],
     "scalastyle": _ROW_RULE["scalastyle"],
     "solhint": _ROW_RULE["solhint"],
     "sphinx": _ROW_RULE["sphinx"],
@@ -3492,10 +3260,10 @@ FAST_FORMATS: dict[str, object] = {
     "verilator": _ROW_RULE["verilator"],
     "xmllint": _r_xmllint,
     "zig": _ROW_RULE["zig"],
-    "ninja": _r_ninja,
-    "xcodebuild": _r_xcodebuild,
-    "black_isort": _r_black_isort,
-    "pip_resolver": _r_pip_resolver,
+    "ninja": _ROW_RULE["ninja"],
+    "xcodebuild": _ROW_RULE["xcodebuild"],
+    "black_isort": _ROW_RULE["black_isort"],
+    "pip_resolver": _ROW_RULE["pip_resolver"],
     "docker_build": _r_docker_build,
     # round-7 batch 6a: carry / consume-pair / lead / lookahead shapes
     "ansible": _r_ansible,
@@ -3577,11 +3345,12 @@ _BUILDER_EVENT_TRIGGERS = {
 
 
 # --- auto-detect candidate prefilters (round 8, VERDICT r7 ask #3) -----------
-# One doc-level prefilter per format. A rule row's is its own rule
-# prefilter (the row's `pre`); a hand-written single-rule builder reads
-# its line prefilter from here, so the two cannot drift; a multi-rule
-# format's mirrors the pre_* lines inside its rule function: the OR of
-# its rule prefilters. Evaluated under _doc_prefilter_mode so
+# One doc-level prefilter per format. A rule row's comes from the row:
+# the OR of its rules' `pre`, in rule order (_row_pre), the same literals
+# its line rules test; a hand-written single-rule builder reads its line
+# prefilter from here, so the two cannot drift; a hand-written
+# multi-rule format's mirrors the pre_* lines inside its rule function:
+# the OR of its rule prefilters. Evaluated under _doc_prefilter_mode so
 # _has/_starts hit the whole content column. Soundness contract: a
 # format that produces >=1 event on a document MUST be admitted (every
 # event requires some rule whose prefilter its line passed), so OR over
@@ -3591,7 +3360,7 @@ _BUILDER_EVENT_TRIGGERS = {
 # tests/test_logparse_auto.py's diagnose-vs-candidate sweep over every
 # fixture and fuzz document.
 _AUTO_PRE: dict[str, object] = {
-    **{r.key: partial(_prefilter, r.pre) for r in _ROWS},
+    **{r.key: partial(_row_pre, r) for r in _ROWS},
     "pytest": lambda: _starts("FAILED", "ERROR") | _starts("E"),
     # every eslint event requires BOTH an issue line (whose regex
     # contains a literal error|warning) AND a carried file-header line
@@ -3607,14 +3376,11 @@ _AUTO_PRE: dict[str, object] = {
     "jest": lambda: _has("FAIL", "PASS"),
     "npm": lambda: _starts("npm "),
     "rustc": lambda: _starts("error", "warning"),  # events need an err head (grp>=1)
-    "flake8": lambda: _has(":"),
-    "pylint": lambda: _has(":") & _has("("),
     "yamllint": lambda: (_has("error", "warning") & _has("("))
     | _has(".yml", ".yaml"),
     "shellcheck": lambda: _starts("In ") | (_has("SC") & _has("^")),
     "javac": lambda: _has(".java:") & _has("error:", "warning:"),
     "sqlfluff": lambda: _starts("==") | _starts("L:"),
-    "luacheck": lambda: _has(".lua:") & _has("("),
     "stylelint": lambda: _has(".css", ".scss", ".less", ".sass")
     | _has("✖", "x"),
     "python_traceback": lambda: _has('File "')
@@ -3626,9 +3392,7 @@ _AUTO_PRE: dict[str, object] = {
     & (_has("at ") & _has("(")),  # emit needs hdr AND >=1 frame
     "cargo_test": lambda: (_starts("test ") & _has("FAILED"))
     | (_starts("thread '") & _has("panicked at")),
-    "ctest": lambda: _has("Test") & _has("*"),
     "tap": lambda: _starts("not ok "),
-    "python_unittest": lambda: _starts("FAIL: ", "ERROR: "),
     "vitest": lambda: (_has(".test.", ".spec.") & _has("("))
     | _has("×", "x")
     | (_has("FAIL") & _has(">")),
@@ -3636,28 +3400,12 @@ _AUTO_PRE: dict[str, object] = {
     "catch2": lambda: _has("FAILED:"),
     "mocha": lambda: _has(")"),
     "biome": lambda: _has("lint/", "format", "organizeImports"),
-    "erlang": lambda: _has(".erl:"),
-    "msbuild": lambda: _has("error", "warning") & _has("("),
     "perl": lambda: _has(" at ") & _has(" line "),
-    "php_lint": lambda: _starts("PHP "),
-    "playwright": lambda: _has("›"),
-    "ruby_traceback": lambda: _has(".rb:") & _has("in "),
     # the file group's extension is always followed by ':', so the
     # ext-colon literals are implied by the regex and keep the xmllint
     # staging off generic "error" lines
     "xmllint": lambda: _has(".xml:", ".xsd:", ".xsl:", ".svg:", ".html:")
     & _has("error", "warning"),
-    "ninja": lambda: _starts("FAILED: ") | _starts("ninja: "),
-    "xcodebuild": lambda: _starts("** ") | (_has("'") & _has("failed")),
-    "black_isort": lambda: _starts("would reformat ", "error: cannot format ")
-    | (_starts("ERROR: ") & _has("Imports are incorrectly sorted")),
-    # the uv rule's regex group requires one of three literal message
-    # heads, so the bare _has("error") (which admitted every compiler
-    # log) tightens to the conjunction
-    "pip_resolver": lambda: _starts("ERROR: ")
-    | (_has("error", "×")
-       & _has("No solution found", "Failed to resolve", "Because "))
-    | _has(" depends on "),
     "docker_build": lambda: (_starts("Step ", "#") & _has("ERROR"))
     | _starts("failed to solve: ", "ERROR: "),
     "ansible": lambda: _starts("TASK [")

@@ -563,6 +563,18 @@ def test_parse_black_isort():
     assert evs[2]["tool_name"] == "isort" and evs[2]["ref_file"] == "/app/src/views.py"
 
 
+def test_ninja_blank_failed_target_names_no_test():
+    """A `FAILED:` line whose target is only spaces names no test. The
+    ninja parser took the first word of the target, so this line raised
+    IndexError there, and with it every auto-detect parse, since
+    diagnose runs every parser."""
+    evs = lp.parse_content("hello\nFAILED:  \n", "auto")
+    assert [(e["tool_name"], e["message"], e["test_name"]) for e in evs] == [
+        ("ninja", "FAILED:", None)
+    ]
+    evs = lp.parse_content("FAILED:  obj/main.o\nFAILED: a.o b.o\n", "ninja")
+    assert [e["test_name"] for e in evs] == ["obj/main.o", "a.o"]
+
 def test_parse_cargo_test():
     evs = lp.parse_content(CARGO_TEST_LOG, "cargo_test")
     assert len(evs) == 2

@@ -5,6 +5,8 @@ plan must contain zero Python execution."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from blq_cli_spark.sources import logparse as lp
@@ -378,6 +380,39 @@ def test_fast_path_matches_python(spark, fmt):
     docs = [(f"d{i}", c) for i, c in enumerate(CASES[fmt])]
     assert _spark_rows(spark, docs, fmt) == _python_rows(docs, fmt)
 
+
+# ninja `FAILED:` targets led by extra spaces: the Python parser raised
+# on a blank one, and the JVM named the test '' where Python named the
+# first word. Kept out of CASES because the fuzz pool draws its lines
+# from every CASES document: new lines there would reshuffle every
+# format's fuzz documents, and with them the golden hashes recorded
+# from those documents (tests/data/parse_golden.json).
+NINJA_EDGE = "hello\nFAILED:  obj/main.o\nFAILED:  \nninja: error: build stopped\n"
+
+
+def test_ninja_space_led_targets_match_python(spark):
+    docs = [("d0", NINJA_EDGE)]
+    want = _python_rows(docs, "ninja")
+    assert [r[_COLS.index("test_name")] for r in want] == ["obj/main.o", None, None]
+    assert _spark_rows(spark, docs, "ninja") == want
+    df = spark.createDataFrame(docs, "source_id string, content string")
+    auto = sorted(tuple(r[k] for k in _COLS) for r in lpf.fast_parse_auto_df(df).collect())
+    assert auto == _python_rows(docs, "auto") == want
+
+def test_row_patterns_mean_the_same_groups_in_java(spark):
+    """Every rule of every row, as the Column compiler hands it to the
+    JVM: no `(?P` named group survives the strip, and java.util.regex
+    compiles it with as many groups as Python's `re`, so the staged
+    group positions read the same groups. No Spark job runs."""
+    jvm = getattr(spark.sparkContext, "_jvm", None)
+    if jvm is None:
+        pytest.skip("no JVM gateway")
+    for row in lp._ROWS:
+        for rule in row.rules:
+            p = lpf._java_pattern(rule.pattern)
+            assert "(?P" not in p, (row.key, p)
+            groups = jvm.java.util.regex.Pattern.compile(p).matcher("").groupCount()
+            assert groups == re.compile(rule.pattern).groups, (row.key, p)
 
 def test_fast_formats_all_registered():
     missing = set(lpf.FAST_FORMATS) - set(lp.FORMATS)
